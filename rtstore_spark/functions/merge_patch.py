@@ -10,6 +10,7 @@ The reference applies document updates as JSON merge patches: patching
 
 from __future__ import annotations
 
+import json
 from typing import Any
 
 import pandas as pd  # noqa: F401 — needed at module scope so the UDF's
@@ -31,6 +32,16 @@ def merge_patch(target: Any, patch: Any) -> Any:
         else:
             out[k] = v
     return out
+
+
+def merge_patch_json(doc: str | None, patch: str | None) -> str | None:
+    """One stored update on the driver: the text ``make_json_merge_patch``'s
+    UDF stores for ``(doc, patch)`` — same parse, merge and serialisation,
+    byte for byte."""
+    if patch is None:
+        return doc
+    merged = merge_patch(json.loads(doc) if doc else {}, json.loads(patch))
+    return json.dumps(merged, separators=(",", ":"), sort_keys=True)
 
 
 def compose_patches(p1: Any, p2: Any) -> Any:
@@ -58,9 +69,10 @@ def make_json_merge_patch():
     import unless the repo is on their PYTHONPATH. A closure is pickled by
     value, so the UDF is self-contained wherever the session was created.
 
-    This is the designated slow path (SURVEY.md §4.2): updates arrive in
-    micro-batch-sized groups, so the UDF touches only the patched rows,
-    never the full collection.
+    This is the set-wise path (SURVEY.md §4.2): block applies and log
+    replays merge micro-batch-sized groups, so the UDF touches only the
+    patched rows, never the full collection. A single update merges on
+    the driver with ``merge_patch_json``, which stores the same text.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T

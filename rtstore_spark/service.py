@@ -485,6 +485,9 @@ class NodeService:
 
 class _Handler(BaseHTTPRequestHandler):
     protocol_version = "HTTP/1.1"
+    # a response goes out as two send()s (headers, then body); with Nagle
+    # on, a keep-alive client's delayed ACK holds the body ~40 ms
+    disable_nagle_algorithm = True
     node: NodeService = None  # set by serve()
     # request-body cap: every proto message here is small (mutations,
     # queries); 64 MB leaves room for large document batches while

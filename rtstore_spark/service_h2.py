@@ -813,6 +813,9 @@ class _Connection:
 class _H2Handler(socketserver.BaseRequestHandler):
     def handle(self) -> None:
         self.request.settimeout(self.server.io_timeout)
+        # HEADERS and DATA frames leave in separate sendall()s: without
+        # TCP_NODELAY the second waits on the peer's delayed ACK
+        self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         conn = _Connection(
             self.request, self.server.gateway, self.server.rpc_pool,
             hpack_dynamic=getattr(self.server, "hpack_dynamic", False),

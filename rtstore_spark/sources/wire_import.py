@@ -169,10 +169,7 @@ def _missing_collections(store, good: DataFrame) -> list:
     )
     if not touched:
         return []
-    existing = {
-        (r["db_addr"], r["col_name"])
-        for r in store.collections().select("db_addr", "col_name").collect()
-    }
+    existing = store.collection_keys()
     return [t for t in touched if (t["db_addr"], t["col_name"]) not in existing]
 
 
@@ -244,9 +241,7 @@ def import_wire_rollup(
         first_refs = sorted(
             _first_references(good), key=lambda r: (r["block"], r["order"])
         )
-        known = {
-            r["db_addr"] for r in store.databases().select("db_addr").collect()
-        }
+        known = set(store._catalog()[0])  # tombstoned addresses included
         pending: list = []  # creates whose foreign address is not yet bound
 
         def _create(row, addr: str | None):

@@ -612,18 +612,8 @@ class BatchApplier:
                 else:
                     e["has_del"] = True
 
-            # catalog lookups once per block, not per collection per phase
-            # (tombstoned/hidden collections are absent from collections())
-            existing = (
-                {
-                    (r["db_addr"], r["col_name"])
-                    for r in store.collections()
-                    .select("db_addr", "col_name")
-                    .collect()
-                }
-                if by_col
-                else set()
-            )
+            # catalog lookup once per block, not per collection per phase
+            existing = store.collection_keys() if by_col else set()
 
             # one contiguous reservation per collection (sorted order keeps
             # replica id assignment deterministic), mapped to per-mutation

@@ -9,10 +9,14 @@ of RocksDB+EJDB2 single-node storage:
   ``(block, order)`` (mutation_store.rs:444-481);
 - the *current state* is a window over versions: latest (block, order) per
   doc_id, dropping tombstones. One hash shuffle on doc_id; at scale the
-  ``compact()`` job collapses history so reads stay O(live docs);
+  ``compact()`` job collapses history so reads stay O(live docs). A known
+  id set (point get, ownership check, update merge) skips the window: one
+  bucket-pruned collect of the ids' versions, resolved on the driver;
 - updates resolve their merge-patch (RFC 7386, EJDB2 ``patch`` semantics —
   doc_store.rs:470-480) at *write* time against the current state, so the
-  read path never folds patch chains.
+  read path never folds patch chains;
+- the catalogs (databases, collections) are read on every request, so their
+  latest rows live on the driver, revalidated by a file listing.
 
 Sequencing (block/order counters, doc-id high-water marks, nonces) lives in
 ``StateStore`` — the single-sequencer role of the reference's rollup node.
@@ -39,7 +43,7 @@ from rtstore_spark.errors import (
     InvalidMutation,
     OwnerVerifyFailed,
 )
-from rtstore_spark.functions.merge_patch import make_json_merge_patch
+from rtstore_spark.functions.merge_patch import merge_patch_json
 from rtstore_spark.jql import jql_query
 from rtstore_spark.store.fs import fs_for
 from rtstore_spark.store.state import StateStore
@@ -135,6 +139,18 @@ def derive_db_addr(sender: str, nonce: int, network: int = 1) -> str:
     return "0x" + h[:40]
 
 
+def _latest_by(rows, key) -> dict:
+    """{key(row): the row with the greatest (block, order)} — the
+    latest-version rule of every versioned store table, on the driver."""
+    out: dict = {}
+    for r in rows:
+        k = key(r)
+        cur = out.get(k)
+        if cur is None or (r["block"], r["order"]) > (cur["block"], cur["order"]):
+            out[k] = r
+    return out
+
+
 class DocStore:
     def __init__(
         self, spark: SparkSession, root: str, network: int = 1, fs=None,
@@ -157,6 +173,8 @@ class DocStore:
         self.auto_compact_every = auto_compact_every
         self.auto_compact_max_files = auto_compact_max_files
         self._append_counts: dict[tuple[str, str], int] = {}
+        # (listing key, (databases, collections)) — see _catalog
+        self._catalog_cache: tuple | None = None
         # collection-name length cap: collection_key.rs:21-33
         self.max_col_name = 20
         # bounded FIFO of persisted RunQuery matched-sets (see query_docs)
@@ -288,33 +306,39 @@ class DocStore:
         )
         df.coalesce(1).write.mode("append").partitionBy("doc_bucket").parquet(path)
 
-    def _read(self, path: str, schema: T.StructType) -> DataFrame:
+    def _read(
+        self, path: str, schema: T.StructType, names: list[str] | None = None
+    ) -> DataFrame:
         """Flat table read from explicitly-listed top-level parquet files.
 
         Listing (instead of handing Spark the directory) makes the read
         immune to orphan ``gen-*`` directories a crashed rewrite can leave
         in the root: an un-flipped generation is never part of the live
         table, so the reader must not let partition discovery trip over
-        it."""
+        it. ``names`` is a listing the caller already took."""
+        if names is None:
+            names = self.fs.listdir(path)
         files = [
             os.path.join(path, f)
-            for f in self.fs.listdir(path)
+            for f in names
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         ]
         if not files:
             return self.spark.createDataFrame([], schema=schema)
         return self.spark.read.schema(schema).parquet(*files)
 
-    def _read_docs(self, path: str) -> DataFrame:
+    def _read_docs(self, path: str, buckets: set[int] | None = None) -> DataFrame:
         """Collection read: doc rows + the doc_bucket partition column.
 
         Reads from explicitly-listed entries of the resolved directory:
 
         - ``doc_bucket=`` partition directories (with basePath, so the
-          partition column and its pruning survive);
+          partition column and its pruning survive) — only the ``buckets``
+          given, when an id lookup names them;
         - legacy root-level flat files, unioned with a null doc_bucket
           (Spark's partition discovery silently drops root files once
-          partition dirs exist; pruning filters keep null buckets);
+          partition dirs exist) — read by id lookups too, since they
+          carry no bucket;
         - anything else — in particular an orphan ``gen-*`` snapshot left
           by a crashed compaction before its pointer flip — is ignored.
         """
@@ -323,15 +347,17 @@ class DocStore:
             os.path.join(path, f) for f in entries
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         ]
-        buckets = [
-            os.path.join(path, e) for e in entries if e.startswith("doc_bucket=")
+        wanted = None if buckets is None else {f"doc_bucket={b}" for b in buckets}
+        dirs = [
+            os.path.join(path, e) for e in entries
+            if e.startswith("doc_bucket=") and (wanted is None or e in wanted)
         ]
         parts = []
-        if buckets:
+        if dirs:
             parts.append(
                 self.spark.read.schema(DOC_READ_SCHEMA)
                 .option("basePath", path)
-                .parquet(*buckets)
+                .parquet(*dirs)
             )
         if flat:
             parts.append(
@@ -406,40 +432,86 @@ class DocStore:
         ]
     )
 
+    # The catalogs are tiny and read by every request (each doc op checks
+    # its collection), so their latest rows live on the driver — the
+    # reference's in-memory db_state (doc_store.rs:45-70). The cache key is
+    # each catalog's resolved directory plus its file listing: every catalog
+    # write appends a file and every compact_catalogs flips the pointer, so
+    # any writer — this instance or another process on the same root —
+    # changes the key, and the next lookup reloads.
+
+    def _catalog(self) -> tuple[dict[str, dict], dict[tuple[str, str], dict]]:
+        """Latest catalog row per database (tombstones included) and per
+        (db, collection). One Spark collect of both catalogs on a miss;
+        a hit costs two pointer reads and two directory listings."""
+        key = tuple(
+            (path, tuple(self.fs.listdir(path)))
+            for path in (self._db_path(), self._col_path())
+        )
+        cached = self._catalog_cache
+        if cached is not None and cached[0] == key:
+            return cached[1]
+        (db_path, db_names), (col_path, col_names) = key
+        # read exactly the files the key lists: a file landing after the
+        # listing changes the next key instead of hiding behind this one
+        rows = (
+            self._read(db_path, self.DB_SCHEMA, db_names)
+            .unionByName(
+                self._read(col_path, self.COL_SCHEMA, col_names),
+                allowMissingColumns=True,
+            )
+            .collect()
+        )
+        # col_name is never null in a collection row, always in a db row
+        db_fields = self.DB_SCHEMA.fieldNames()
+        col_fields = self.COL_SCHEMA.fieldNames()
+        latest = (
+            _latest_by(
+                ({f: r[f] for f in db_fields} for r in rows if r["col_name"] is None),
+                lambda r: r["db_addr"],
+            ),
+            _latest_by(
+                ({f: r[f] for f in col_fields} for r in rows if r["col_name"] is not None),
+                lambda r: (r["db_addr"], r["col_name"]),
+            ),
+        )
+        self._catalog_cache = (key, latest)
+        return latest
+
     def databases(self) -> DataFrame:
-        return self._read(self._db_path(), self.DB_SCHEMA)
+        """Latest catalog row per database, tombstones included."""
+        return self.spark.createDataFrame(
+            list(self._catalog()[0].values()), schema=self.DB_SCHEMA
+        )
 
     def databases_latest(self) -> list[dict]:
         """Live databases: latest catalog row per address, tombstones
         (db_type='deleted') excluded — the M6 visibility contract."""
-        w = Window.partitionBy("db_addr").orderBy(
-            F.col("block").desc(), F.col("order").desc()
-        )
         return [
-            r.asDict()
-            for r in self.databases()
-            .withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1 AND db_type != 'deleted'")
-            .drop("_rn")
-            .collect()
+            dict(r) for r in self._catalog()[0].values()
+            if r["db_type"] != "deleted"
         ]
 
     def collections(self, db_addr: str | None = None) -> DataFrame:
         """Latest catalog row per (db, collection) — AddIndex appends versions."""
-        df = self._read(self._col_path(), self.COL_SCHEMA)
-        if db_addr is not None:
-            df = df.filter(F.col("db_addr") == db_addr)
-        w = Window.partitionBy("db_addr", "col_name").orderBy(
-            F.col("block").desc(), F.col("order").desc()
+        return self.spark.createDataFrame(
+            [
+                r for (db, _), r in self._catalog()[1].items()
+                if db_addr is None or db == db_addr
+            ],
+            schema=self.COL_SCHEMA,
         )
-        return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
+    def collection_keys(self) -> set[tuple[str, str]]:
+        """Every (db, collection) the catalog holds."""
+        return set(self._catalog()[1])
 
     def databases_of_owner(self, sender: str) -> DataFrame:
         """Owner index scan — db_owner_key_v2.rs:21-33."""
         return self.databases().filter(F.col("sender") == sender)
 
     def _db_exists(self, db_addr: str) -> bool:
-        return bool(self.databases().filter(F.col("db_addr") == db_addr).head(1))
+        return db_addr in self._catalog()[0]
 
     def _indexed_paths(self, db_addr: str, col: str) -> list[tuple[str, str]]:
         """Registered (path, type) index pairs of a collection (M8)."""
@@ -451,11 +523,9 @@ class DocStore:
             for i in json.loads(row["index_fields"])
         ]
 
-    def _col_row(self, db_addr: str, col: str):
-        rows = (
-            self.collections(db_addr).filter(F.col("col_name") == col).head(1)
-        )
-        return rows[0] if rows else None
+    def _col_row(self, db_addr: str, col: str) -> dict | None:
+        row = self._catalog()[1].get((db_addr, col))
+        return dict(row) if row is not None else None
 
     def create_database(
         self, sender: str, nonce: int | None, desc: str = "", db_type: str = "doc",
@@ -599,27 +669,16 @@ class DocStore:
         if self._col_row(db_addr, col) is None:
             raise CollectionNotFound(f"{db_addr}/{col}")
 
-    def current_state(
-        self, db_addr: str, col: str, doc_ids: list[int] | None = None
-    ) -> DataFrame:
+    def current_state(self, db_addr: str, col: str) -> DataFrame:
         """Merge-on-read view: latest version per doc_id, tombstones dropped.
 
-        ``doc_ids`` narrows the view to an id set BEFORE the state window:
-        the derived ``doc_bucket`` predicate prunes whole partition
-        directories (the directory-level analog of the reference's
-        ``/doc/‖db‖id`` point-get key, db_doc_key_v2.rs:24-40) and the
-        doc_id filter then prunes row groups via the compacted sort's
-        min/max stats — a point get touches one bucket, not the corpus.
-        Null buckets (legacy flat files) are kept, never skipped.
+        The scan path (queries, compaction, exports): one window with a
+        hash shuffle on doc_id. A known id set — point get, ownership
+        check, update merge — goes through ``_latest_versions`` instead,
+        which needs neither the window nor the shuffle.
         """
         self._require_col(db_addr, col)
         df = self._read_docs(self._data_path(db_addr, col))
-        if doc_ids is not None:
-            buckets = sorted({int(i) // DOC_IDS_PER_BUCKET for i in doc_ids})
-            df = df.filter(
-                (F.col("doc_bucket").isin(buckets) | F.col("doc_bucket").isNull())
-                & F.col("doc_id").isin([int(i) for i in doc_ids])
-            )
         w = Window.partitionBy("doc_id").orderBy(
             F.col("block").desc(), F.col("order").desc()
         )
@@ -628,6 +687,32 @@ class DocStore:
             .filter((F.col("_rn") == 1) & (F.col("op") != "D"))
             .drop("_rn", "op", "doc_bucket")
         )
+
+    def _id_versions(self, db_addr: str, col: str, ids: list[int]) -> DataFrame:
+        """Every stored version of ``ids``. Reads only the ids' doc_bucket
+        directories (the directory-level analog of the reference's
+        ``/doc/‖db‖id`` point-get key, db_doc_key_v2.rs:24-40) plus legacy
+        flat files; the doc_id filter then prunes row groups via the
+        compacted sort's min/max stats."""
+        ids = sorted({int(i) for i in ids})
+        return (
+            self._read_docs(
+                self._data_path(db_addr, col),
+                {i // DOC_IDS_PER_BUCKET for i in ids},
+            )
+            .filter(F.col("doc_id").isin(ids))
+            .drop("doc_bucket")
+        )
+
+    def _latest_versions(self, db_addr: str, col: str, ids: list[int]) -> dict:
+        """{doc_id: latest live version row} for a known id set: one
+        collect with no exchange, then the max (block, order) per id picked
+        on the driver; tombstoned and unknown ids are absent."""
+        latest = _latest_by(
+            self._id_versions(db_addr, col, ids).collect(),
+            lambda r: r["doc_id"],
+        )
+        return {i: r for i, r in latest.items() if r["op"] != "D"}
 
     def add_docs(
         self, db_addr: str, col: str, docs: list[str], sender: str,
@@ -666,18 +751,13 @@ class DocStore:
         self._note_append(db_addr, col)
         return ids
 
-    def _verify_ownership(self, state_df: DataFrame, ids: list[int], sender: str):
-        """Owner-only guard for update/delete — db_store_v2.rs:819-846."""
-        found = {
-            r["doc_id"]: r["owner"]
-            for r in state_df.filter(F.col("doc_id").isin(ids))
-            .select("doc_id", "owner")
-            .collect()
-        }
-        missing = [i for i in ids if i not in found]
+    def _verify_ownership(self, latest: dict, ids: list[int], sender: str):
+        """Owner-only guard for update/delete — db_store_v2.rs:819-846.
+        ``latest`` is ``_latest_versions`` of ``ids``."""
+        missing = [i for i in ids if i not in latest]
         if missing:
             raise InvalidMutation(f"documents not found: {missing}")
-        bad = [i for i in ids if found[i] != sender]
+        bad = [i for i in ids if latest[i]["owner"] != sender]
         if bad:
             raise OwnerVerifyFailed(f"sender {sender} does not own docs {bad}")
 
@@ -694,36 +774,23 @@ class DocStore:
         self._require_col(db_addr, col)
         if nonce is not None:
             self.state.incr_nonce(sender, nonce)
-        # bucket-pruned state: the ownership check and the merge only ever
-        # need the target ids' latest versions
-        state_df = self.current_state(db_addr, col, doc_ids=ids)
-        self._verify_ownership(state_df, ids, sender)
+        # the targets' latest versions, collected once for the ownership
+        # check and the merge. The merge runs on the driver: the request
+        # carried its patches through it already, and the merged rows
+        # (one per id) are the same size. Set-wise blocks keep the Spark
+        # UDF merge (store/batch_apply.py); both store identical text.
+        latest = self._latest_versions(db_addr, col, ids)
+        self._verify_ownership(latest, ids, sender)
         block, order = self._seq(seq)
-        patch_df = self.spark.createDataFrame(
-            [{"doc_id": i, "patch": p} for i, p in zip(ids, patches)],
-            schema="doc_id long, patch string",
-        )
-        json_merge_patch = make_json_merge_patch()
-        merged = (
-            state_df.join(F.broadcast(patch_df), "doc_id")
-            .select(
-                "doc_id",
-                "owner",
-                json_merge_patch(F.col("doc"), F.col("patch")).alias("doc"),
-                F.lit("U").alias("op"),
-                F.lit(block).alias("block"),
-                F.lit(order).alias("order"),
-            )
-        )
-        # Write the merged versions directly — never through the driver. The
-        # repartition(1) exchanges only the batch's output rows (≤ len(ids))
-        # into one file per bucket while the state window + merge upstream
-        # stay parallel.
-        merged.withColumn(
-            "doc_bucket", F.expr(f"doc_id div {DOC_IDS_PER_BUCKET}")
-        ).repartition(1).write.mode("append").partitionBy("doc_bucket").parquet(
-            self._data_path(db_addr, col)
-        )
+        rows = [
+            {
+                "doc_id": i, "owner": latest[i]["owner"],
+                "doc": merge_patch_json(latest[i]["doc"], p), "op": "U",
+                "block": block, "order": order,
+            }
+            for i, p in zip(ids, patches)
+        ]
+        self._append_doc_rows(rows, self._data_path(db_addr, col))
         self._log(sender, nonce or 0, "update_document", db_addr, col,
                   {"patches": patches}, ids, block, order, mid=mid)
         self._note_append(db_addr, col)
@@ -737,8 +804,7 @@ class DocStore:
         self._require_col(db_addr, col)
         if nonce is not None:
             self.state.incr_nonce(sender, nonce)
-        state_df = self.current_state(db_addr, col, doc_ids=ids)
-        self._verify_ownership(state_df, ids, sender)
+        self._verify_ownership(self._latest_versions(db_addr, col, ids), ids, sender)
         block, order = self._seq(seq)
         rows = [
             {
@@ -757,10 +823,10 @@ class DocStore:
     # ------------------------------------------------------------------
 
     def get_doc(self, db_addr: str, col: str, doc_id: int):
-        """S6 point get — doc_store.rs:240-250. Bucket-pruned: touches one
+        """S6 point get — doc_store.rs:240-250. One Spark job over one
         partition directory, not the collection."""
-        rows = self.current_state(db_addr, col, doc_ids=[doc_id]).head(1)
-        return rows[0] if rows else None
+        self._require_col(db_addr, col)
+        return self._latest_versions(db_addr, col, [doc_id]).get(int(doc_id))
 
     def query_docs(
         self, db_addr: str, col: str, query: str, params=None
@@ -930,12 +996,11 @@ class DocStore:
         compacted (db_addr, col) pairs (catalogs as ("__catalogs", "")).
         """
         done: list[tuple[str, str]] = []
-        for d in self.databases_latest():
-            for r in self.collections(d["db_addr"]).collect():
-                root = self._data_root(r["db_addr"], r["col_name"])
-                if self._live_file_count(root) > max_files:
-                    self.compact(r["db_addr"], r["col_name"])
-                    done.append((r["db_addr"], r["col_name"]))
+        live = {d["db_addr"] for d in self.databases_latest()}
+        for db, col in sorted(self.collection_keys()):
+            if db in live and self._live_file_count(self._data_root(db, col)) > max_files:
+                self.compact(db, col)
+                done.append((db, col))
         if any(
             self._live_file_count(root) > max_files
             for root in (self._db_root(), self._col_root())
@@ -1002,8 +1067,8 @@ class DocStore:
         catalogs — one file per mutation otherwise — into a single parquet
         file each, via the same pointer-flip rewrite as ``compact``.
         Catalog history is preserved verbatim (every version row survives;
-        ``databases_latest``/``collections`` window over versions), only
-        the file count collapses.
+        ``_catalog`` picks the latest per key), only the file count
+        collapses.
         """
         for root, schema in (
             (self._db_root(), self.DB_SCHEMA),

@@ -222,11 +222,7 @@ def replay_log_batch(replica, batch_df: DataFrame) -> int:
             _converge_state(replica, batch, doc, has_doc_ops=False)
             return len(control)
 
-        existing = {
-            (r["db_addr"], r["col_name"])
-            for r in replica.collections().select("db_addr", "col_name").collect()
-        }
-        missing = sorted(set(by_col) - existing)
+        missing = sorted(set(by_col) - replica.collection_keys())
         if missing:
             # a logged doc op always followed its collection's creation on
             # the origin — a miss here means a torn/foreign log, not a

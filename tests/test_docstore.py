@@ -8,6 +8,8 @@ negatives, index add), and the doc-id replay contract
 from __future__ import annotations
 
 import json
+import sys
+import threading
 
 import pytest
 
@@ -20,8 +22,10 @@ from rtstore_spark.errors import (
     InvalidMutation,
     OwnerVerifyFailed,
 )
+from rtstore_spark.client import Client
 from rtstore_spark.functions.merge_patch import merge_patch
 from rtstore_spark.store import DocStore
+from rtstore_spark.store.ingest import digest_signature
 
 ALICE = "0x" + "aa" * 20
 BOB = "0x" + "bb" * 20
@@ -88,6 +92,161 @@ class TestCatalog:
         store.create_database(ALICE, nonce=6)  # strictly increasing ok
 
 
+class TestCatalogFreshness:
+    def test_earlier_instance_sees_other_writers(self, spark, tmp_path):
+        """The catalog lives on the driver, revalidated by a file listing:
+        an instance opened BEFORE another writer on the same root must see
+        every catalog change that writer makes, including across a
+        catalog compaction. Each change lands after a lookup has warmed
+        the reader's cache, so staleness would show."""
+        root = str(tmp_path / "fresh")
+        reader = DocStore(spark, root)
+        assert reader.databases_latest() == []
+        writer = Client(spark, root, ALICE)
+
+        db = writer.createDocumentDatabase("d")
+        assert [d["db_addr"] for d in reader.databases_latest()] == [db]
+        with pytest.raises(CollectionNotFound):
+            reader.get_doc(db, "c", 1)
+
+        writer.createCollection(db, "c")
+        reader._require_col(db, "c")
+        assert reader.get_doc(db, "c", 1) is None
+        assert reader._indexed_paths(db, "c") == []
+
+        writer.addIndex(db, "c", [{"path": "/x", "type": "int64"}])
+        assert reader._indexed_paths(db, "c") == [("/x", "int64")]
+
+        writer.deleteEventDatabase(db)
+        assert reader.databases_latest() == []
+
+        # a compaction flips the catalog pointers; lookups on both
+        # instances stay correct, before and after further writes
+        writer.store.compact_catalogs()
+        assert reader.databases_latest() == []
+        assert reader._indexed_paths(db, "c") == [("/x", "int64")]
+        db2 = writer.createDocumentDatabase("d2")
+        writer.createCollection(db2, "c2")
+        assert [d["db_addr"] for d in reader.databases_latest()] == [db2]
+        assert reader.collection_keys() == {(db, "c"), (db2, "c2")}
+        reader.compact_catalogs()
+        assert writer.store.collection_keys() == {(db, "c"), (db2, "c2")}
+        assert [c["col_name"] for c in reader.collections(db2).collect()] == ["c2"]
+
+
+    def test_concurrent_lookups_never_serve_a_stale_catalog(self, spark, tmp_path):
+        """Request threads share one store and its catalog cache. Once a
+        create returns, no thread's later lookup may miss it, however the
+        threads' reloads interleave."""
+        store = DocStore(spark, str(tmp_path / "conc"))
+        db = store.create_database(ALICE, nonce=1)
+        created: list[tuple[str, str]] = []
+        stale: list = []
+        stop = threading.Event()
+
+        def reader():
+            while not stop.is_set():
+                want = set(created)  # taken before the lookup starts
+                missing = want - store.collection_keys()
+                if missing:
+                    stale.append(missing)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        threads = [threading.Thread(target=reader) for _ in range(6)]
+        try:
+            for t in threads:
+                t.start()
+            for i in range(6):
+                store.create_collection(db, f"c{i}", [], ALICE)
+                created.append((db, f"c{i}"))
+        finally:
+            stop.set()
+            for t in threads:
+                t.join(timeout=120)
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert stale == []
+        assert store.collection_keys() == set(created)
+
+
+class TestJobCounts:
+    def test_point_paths_run_no_catalog_or_window_jobs(self, spark, tmp_path):
+        """On a warm store the catalog check runs no Spark job, a point
+        get one (the id-filtered collect), and a one-id update or delete
+        at most three (the collect plus the version and log appends)."""
+        store = DocStore(spark, str(tmp_path / "jobs"))
+        db = store.create_database(ALICE, nonce=1)
+        store.create_collection(db, "c", [], ALICE)
+        ids = store.add_docs(db, "c", ['{"a": 1}', '{"a": 2}'], ALICE)
+        sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+        def jobs(fn) -> int:
+            before = int(sched.nextJobId())
+            fn()
+            return int(sched.nextJobId()) - before
+
+        store._require_col(db, "c")  # warm the catalog
+        assert jobs(lambda: store._require_col(db, "c")) == 0
+        assert jobs(lambda: store.get_doc(db, "c", ids[0])) == 1
+        assert jobs(
+            lambda: store.update_docs(db, "c", [ids[0]], ['{"b": 1}'], ALICE)
+        ) <= 3
+        assert jobs(lambda: store.delete_docs(db, "c", [ids[1]], ALICE)) <= 3
+        assert json.loads(store.get_doc(db, "c", ids[0])["doc"]) == {"a": 1, "b": 1}
+        assert store.get_doc(db, "c", ids[1]) is None
+
+
+class TestMergeParity:
+    # (stored document, patch): a nested object patch, a null that
+    # removes a key, non-object patch values (inside an object and as the
+    # whole patch), and a patch to a document whose body is not an object
+    CASES = [
+        ('{"a": {"b": 1, "c": {"d": 2}}, "k": 1}', '{"a": {"c": {"e": 3}, "b": 9}}'),
+        ('{"a": 1, "b": 2}', '{"b": null, "c": "x"}'),
+        ('{"a": {"b": 1}}', '{"a": [1, {"z": null}], "n": 1.5}'),
+        ('{"a": 1}', '[3, "x"]'),
+        ('[1, 2]', '{"a": {"b": null, "c": 1}}'),
+        ('"text"', '{"é": "ü"}'),
+    ]
+
+    def test_driver_merge_matches_batch_udf(self, spark, tmp_path):
+        """A single update merges on the driver; a set-wise block merges in
+        the Spark UDF. Both must store byte-identical document text."""
+        from rtstore_spark.store.batch_apply import BatchApplier
+        from rtstore_spark.store.ingest import Ingest
+
+        docs = [d for d, _ in self.CASES]
+        patches = [p for _, p in self.CASES]
+        stores = {}
+        for name in ("driver", "batch"):
+            s = DocStore(spark, str(tmp_path / name))
+            db = s.create_database(ALICE, nonce=1)
+            s.create_collection(db, "c", [], ALICE)
+            ids = s.add_docs(db, "c", docs, ALICE)
+            stores[name] = s
+
+        stores["driver"].update_docs(db, "c", ids, patches, ALICE)
+
+        body = json.dumps({
+            "action": "update_document", "db_addr": db, "col_name": "c",
+            "body": {"ids": ids, "patches": patches},
+        }, sort_keys=True)
+        env = {"payload": body, "signature": digest_signature(body, 2, ALICE),
+               "sender": ALICE, "nonce": 2}
+        staged = str(tmp_path / "envs.parquet")
+        spark.createDataFrame([env]).write.parquet(staged)
+        batch = stores["batch"]
+        assert BatchApplier(Ingest(batch)).apply(spark.read.parquet(staged)) == []
+
+        got = {
+            name: {r["doc_id"]: r["doc"] for r in s.current_state(db, "c").collect()}
+            for name, s in stores.items()
+        }
+        assert got["driver"] == got["batch"]
+        assert len(got["driver"]) == len(self.CASES)
+
+
 class TestDocumentCRUD:
     def test_add_docs_sequential_ids(self, store, db_col):
         db, col = db_col
@@ -141,19 +300,25 @@ class TestDocumentCRUD:
         assert len(buckets) == 4  # 35 docs / 10 per bucket
 
         target = ids[25]
-        state = store.current_state(db, "c", doc_ids=[target])
-        plan = state._jdf.queryExecution().executedPlan().toString()
-        assert "doc_bucket" in plan.split("PartitionFilters")[1].split("]")[0]
+
+        def read_dirs():
+            return {
+                os.path.basename(os.path.dirname(f))
+                for f in store._id_versions(db, "c", [target]).inputFiles()
+            }
+
+        assert read_dirs() == {f"doc_bucket={target // 10}"}
         row = store.get_doc(db, "c", target)
         assert json.loads(row["doc"]) == {"v": 25}
 
-        # compaction preserves the bucket layout and the pruned plan
+        # compaction preserves the bucket layout and the pruned lookup
         store.compact(db, "c")
         buckets = sorted(
             d for d in os.listdir(store._data_path(db, "c"))
             if d.startswith("doc_bucket=")
         )
         assert len(buckets) == 4
+        assert read_dirs() == {f"doc_bucket={target // 10}"}
         row = store.get_doc(db, "c", target)
         assert json.loads(row["doc"]) == {"v": 25}
 
