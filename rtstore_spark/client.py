@@ -31,7 +31,7 @@ class Client:
         self.sender = sender
 
     def _next_nonce(self) -> int:
-        return self.store.state._state["nonces"].get(self.sender, 0) + 1
+        return self.store.state.nonce_of(self.sender) + 1
 
     # -- databases --
 
@@ -62,16 +62,8 @@ class Client:
 
         if rows[0]["sender"] != self.sender:
             raise OwnerVerifyFailed(f"{db_addr} not owned by {self.sender}")
-        block, order = self.store.state.next_order()
-        self.store._append(
-            [
-                {
-                    "db_addr": db_addr, "sender": self.sender, "desc": "__deleted__",
-                    "db_type": "deleted", "meta": None, "block": block, "order": order,
-                }
-            ],
-            self.store.DB_SCHEMA,
-            self.store._db_path(),
+        self.store.tombstone_database(
+            db_addr, self.sender, *self.store.state.next_order()
         )
 
     def showDatabase(self, owner: str | None = None) -> list[dict]:
@@ -139,14 +131,12 @@ class Client:
     ) -> QueryResult:
         """RunQuery: JQL string + optional parameters → (docs, count), docs
         parsed like the SDK does (document_v2.ts:37-42)."""
-        out, count = self.store.query_docs(db_addr, col_name, query, params=params)
-        if "doc_id" not in out.columns:
-            # `| count` returns the count and zero documents
-            # (doc_store.rs:398-411, query.test.ts:122-128)
-            return QueryResult(docs=[], count=count)
+        # `| count` returns the count and zero documents
+        # (doc_store.rs:398-411, query.test.ts:122-128)
+        rows, count = self.store.query_docs(db_addr, col_name, query, params=params)
         docs = [
             {"id": r["doc_id"], "doc": json.loads(r["doc"]) if r["doc"] else None,
              "owner": r["owner"] if "owner" in r.__fields__ else None}
-            for r in out.collect()
+            for r in rows
         ]
         return QueryResult(docs=docs, count=count)

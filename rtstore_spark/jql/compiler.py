@@ -364,8 +364,9 @@ def apply_stages(
     already-filtered DataFrame: count / order / skip / limit / projection.
 
     Split out so callers that need both the documents and the pre-limit
-    matched count (RunQuery's contract) can filter once, persist, and run
-    the stages over the cached matched set — one pass over the collection.
+    matched count (RunQuery's contract, ``DocStore.query_docs``) can
+    filter once, persist the matched set for the call, count it and run
+    the stages over it — one pass over the collection.
     """
     limit_n = skip_n = None
     order: list[tuple[str, str]] = []

@@ -407,10 +407,10 @@ class NodeService:
         precedent this boundary follows: at most ``query_page_limit``
         documents per response unless the client explicitly asks for a
         larger ``limit`` (opting into the memory cost). ``count`` is
-        always the TRUE matched total from the query snapshot;
-        ``next_page_token`` (an opaque offset) is present when more pages
-        remain — echo it back as ``page_token``. Each request evaluates
-        against a FRESH snapshot (RunQuery has no cross-request cursor,
+        always the TRUE matched total, counted in the same call as the
+        page; ``next_page_token`` (an opaque offset) is present when
+        more pages remain — echo it back as ``page_token``. Each request
+        reads a FRESH listing (RunQuery has no cross-request cursor,
         matching the reference's per-call semantics), so a walk across
         pages is exact only while the collection is quiet: a concurrent
         add/delete that shifts the result order can skip or repeat a
@@ -420,17 +420,14 @@ class NodeService:
         q = self._need(body, "query")
         if isinstance(q, str):
             q = {"query_str": q}
-        docs_df, count = self.store.query_docs(
-            self._need(body, "db_addr"), self._need(body, "col_name"),
-            self._need(q, "query_str"), params=q.get("parameters"),
-        )
-        if "doc_id" not in docs_df.columns:  # `| count` collector
-            return {"documents": [], "count": count}
         cap = int(body["limit"]) if "limit" in body else self.query_page_limit
         cap = max(1, cap)
         offset = int(body.get("page_token") or 0)
-        page = docs_df.offset(offset) if offset else docs_df
-        rows = page.limit(cap + 1).collect()  # +1 row = "more pages" probe
+        rows, count = self.store.query_docs(
+            self._need(body, "db_addr"), self._need(body, "col_name"),
+            self._need(q, "query_str"), params=q.get("parameters"),
+            offset=offset, limit=cap + 1,  # +1 row = "more pages" probe
+        )
         more = len(rows) > cap
         documents = [
             {
@@ -536,10 +533,6 @@ class _Handler(BaseHTTPRequestHandler):
         if len(parts) == 2 and "." in parts[0]:
             self._grpc_web()
             return
-        if len(parts) != 3 or parts[0] != "v1":
-            self._send_json(404, {"code": 1, "msg": f"no route {self.path}"})
-            return
-        _, service, method = parts
         try:
             n = int(self.headers.get("Content-Length", 0) or 0)
             # a NEGATIVE length would make read() block until EOF (a
@@ -557,7 +550,13 @@ class _Handler(BaseHTTPRequestHandler):
                     {"code": 1, "msg": f"body exceeds {self.MAX_BODY_BYTES} bytes"},
                 )
                 return
-            body = json.loads(self.rfile.read(n) or b"{}")
+            # read before routing: an unknown route's unread body would
+            # desync a keep-alive connection the same way
+            raw = self.rfile.read(n)
+            if len(parts) != 3 or parts[0] != "v1":
+                self._send_json(404, {"code": 1, "msg": f"no route {self.path}"})
+                return
+            body = json.loads(raw or b"{}")
         except (json.JSONDecodeError, ValueError, TypeError) as e:
             # malformed Content-Length is a 400 like malformed JSON — never
             # an uncaught traceback that drops the connection. The body may
@@ -566,6 +565,7 @@ class _Handler(BaseHTTPRequestHandler):
             self.close_connection = True
             self._send_json(400, {"code": 1, "msg": f"bad request: {e}"})
             return
+        _, service, method = parts
         if not isinstance(body, dict):
             self._send_json(400, {"code": 1, "msg": "body must be an object"})
             return

@@ -256,9 +256,7 @@ class GrpcWebGateway:
         return {"doc_db": {k: v for k, v in doc.items() if v}}
 
     def _db_state(self, db_addr: str) -> dict:
-        state = self.node.store.state
-        with state.lock:
-            count = int(state._state["doc_counters"].get(db_addr, 0))
+        count = self.node.store.state.doc_counter(db_addr)
         out = {}
         if count:
             out["total_doc_count"] = count

@@ -155,13 +155,7 @@ def enforce_event_ttl(store: DocStore, now_block: int | None = None) -> dict[str
             ).persist()
             n = tombstones.count()
             if n:
-                from rtstore_spark.store.docstore import DOC_IDS_PER_BUCKET
-
-                tombstones.withColumn(
-                    "doc_bucket", F.expr(f"doc_id div {DOC_IDS_PER_BUCKET}")
-                ).coalesce(1).write.mode("append").partitionBy(
-                    "doc_bucket"
-                ).parquet(store._data_path(db["db_addr"], col))
+                store.append_versions(db["db_addr"], col, tombstones)
                 counts[f"{db['db_addr']}/{col}"] = n
             tombstones.unpersist()
     return counts

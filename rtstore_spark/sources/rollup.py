@@ -264,30 +264,12 @@ class RollupExecutor:
         documented deviation from the reference's row-exact delete.
 
         Returns the GC watermark block (exclusive)."""
-        from rtstore_spark.store.docstore import LOG_BLOCKS_PER_BUCKET
-
         rounds = self.manifest().orderBy(F.col("end_block").desc()).collect()
         if len(rounds) <= min_gc_offset:
             return 0
         watermark = rounds[min_gc_offset]["end_block"] + 1
-        wm_bucket = watermark // LOG_BLOCKS_PER_BUCKET
         t0 = time.time()
-        removed_size = (
-            store.mutation_log()
-            .filter(F.col("block_bucket") < wm_bucket)
-            .agg(F.coalesce(F.sum(F.length("payload")), F.lit(0)).alias("s"))
-            .collect()[0]["s"]
-        )
-        log_path = store._log_path()
-        for entry in store.fs.listdir(log_path):
-            if not entry.startswith("block_bucket="):
-                continue
-            try:
-                bucket = int(entry.split("=", 1)[1])
-            except ValueError:
-                continue
-            if bucket < wm_bucket:
-                store.fs.delete(os.path.join(log_path, entry), recursive=True)
+        removed_size = store.drop_log_buckets_before(watermark)
         # this round's true start = the previous round's end + 1 (0 for the
         # first) — a hardcoded 0 would make every later record claim an
         # overlapping range whose data_size doesn't match the span

@@ -357,14 +357,8 @@ def import_wire_rollup(
             elif action == "DeleteEventDB":
                 # owner-checked tombstone (client.deleteEventDatabase form)
                 if row["db_addr"] in known:
-                    block, order = row["block"], row["order"]
-                    store._append(
-                        [{
-                            "db_addr": row["db_addr"], "sender": row["sender"],
-                            "desc": "__deleted__", "db_type": "deleted",
-                            "meta": None, "block": block, "order": order,
-                        }],
-                        store.DB_SCHEMA, store._db_path(),
+                    store.tombstone_database(
+                        row["db_addr"], row["sender"], row["block"], row["order"]
                     )
                     report["control_applied"] += 1
                 else:
@@ -433,10 +427,7 @@ def import_wire_rollup(
         # counter AND the largest origin-supplied id in this batch
         touched_dbs = [r["db_addr"] for r in doc.select("db_addr").distinct().collect()]
         with store.state.lock:
-            counter_base = {
-                db: store.state._state["doc_counters"].get(db, 0)
-                for db in touched_dbs
-            }
+            counter_base = {db: store.state.doc_counter(db) for db in touched_dbs}
         # only origin-ASSIGNED ids (adds) raise the base; update/delete ids
         # merely REFERENCE docs — often ones this same batch's id-less adds
         # are about to create

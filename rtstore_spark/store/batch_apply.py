@@ -20,9 +20,9 @@ the mutation count:
    and applied driver-side in arrival order via the DocStore methods.
 4. document ops — per touched collection: ONE id-assigned append of all
    adds (ids come from a driver-reserved contiguous range + distributed
-   row_number), ONE ownership-check join + patch-fold + merge-patch append
-   of all updates, ONE ownership-check join + tombstone append of all
-   deletes.
+   row_number), then ownership-check joins for the updates and deletes
+   and ONE append of the updates' patch-folded merges and the deletes'
+   tombstones.
 5. log — ONE append of every accepted doc-op row, carrying the per-mutation
    doc_ids_map so a replica's sequential replay reproduces identical state.
 
@@ -39,7 +39,7 @@ wins instead. Nonces are consumed at admission, so a mutation rejected later
 from __future__ import annotations
 
 import json
-import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -47,18 +47,6 @@ from pyspark.sql import types as T
 
 from rtstore_spark.errors import RTStoreError
 from rtstore_spark.functions.merge_patch import make_json_merge_patch
-from rtstore_spark.store.docstore import (
-    DOC_IDS_PER_BUCKET,
-    DOC_READ_SCHEMA,
-    DOC_SCHEMA,
-    LOG_BLOCKS_PER_BUCKET,
-)
-
-
-def _with_doc_bucket(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "doc_bucket", F.expr(f"doc_id div {DOC_IDS_PER_BUCKET}")
-    )
 
 PAYLOAD_SCHEMA = T.StructType(
     [
@@ -80,58 +68,6 @@ PAYLOAD_SCHEMA = T.StructType(
 
 _CONTROL_ACTIONS = ("create_database", "add_collection")
 _DOC_ACTIONS = ("add_document", "update_document", "delete_document")
-
-
-def pinned_state(store, path: str) -> DataFrame:
-    """current_state over a frozen file list (merge-on-read window:
-    latest (block, order) per doc_id, tombstones dropped). The file
-    list is collected recursively (collection data lives under
-    doc_bucket= partition directories) through the store's FS interface
-    — object-store roots list the same way local ones do; basePath
-    keeps Spark from re-rooting the explicit file list.
-
-    Parquet files are immutable, so every plan built from this snapshot
-    stays stable even when lazily re-evaluated after further appends land
-    in the same directory — the property both the block applier and the
-    set-wise replayer rely on (a directory-listing read would see a
-    batch's own later tombstones on recompute and mis-validate)."""
-    from rtstore_spark.store.docstore import GEN_PREFIX
-
-    # skip orphan gen-* snapshots (written but never pointer-flipped by
-    # a crashed compaction) — they are not part of the live table
-    files = [
-        f
-        for f in store.fs.list_files_recursive(path)
-        if f.endswith(".parquet")
-        and not os.path.relpath(f, path).startswith(GEN_PREFIX)
-    ]
-    if not files:
-        return store.spark.createDataFrame([], schema=DOC_SCHEMA).drop("op")
-    # root-level (legacy flat) files must be read separately: partition
-    # discovery drops them silently once doc_bucket= paths are present
-    flat = [f for f in files if os.path.dirname(f) == path.rstrip("/")]
-    bucketed = [f for f in files if f not in flat]
-    parts = []
-    if bucketed:
-        parts.append(
-            store.spark.read.schema(DOC_READ_SCHEMA)
-            .option("basePath", path)
-            .parquet(*bucketed)
-            .drop("doc_bucket")
-        )
-    if flat:
-        parts.append(store.spark.read.schema(DOC_SCHEMA).parquet(*flat))
-    df = parts[0]
-    for extra in parts[1:]:
-        df = df.unionByName(extra)
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("block").desc(), F.col("order").desc()
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col("op") != "D"))
-        .drop("_rn", "op")
-    )
 
 
 def make_admit_fn(initial_nonces: dict[str, int], sig_mode: str):
@@ -669,11 +605,7 @@ class BatchApplier:
                 log_all = logged[0]
                 for extra in logged[1:]:
                     log_all = log_all.unionByName(extra)
-                log_all.withColumn(
-                    "block_bucket", F.expr(f"block div {LOG_BLOCKS_PER_BUCKET}")
-                ).repartition(1).write.mode("append").partitionBy(
-                    "block_bucket"
-                ).parquet(store._log_path())
+                store.append_log(log_all)
             if add_rows_all is not None:
                 add_rows_all.unpersist()
 
@@ -704,9 +636,6 @@ class BatchApplier:
                 body.get("indexes", []), r["sender"], mid=r["_mid"], seq=seq,
             )
 
-    def _pinned_state(self, path: str) -> DataFrame:
-        return pinned_state(self.store, path)
-
     def _apply_collection(
         self,
         muts: DataFrame,
@@ -721,7 +650,6 @@ class BatchApplier:
         and no probe jobs at all: ``colinfo`` (from the block-level header
         collect) already says which op kinds this collection has."""
         store = self.store
-        path = store._data_path(db, col)
         rejected: list[tuple[dict, str]] = []
         ok_arrivals = []  # DFs of accepted _arrival values, for the log
 
@@ -745,22 +673,20 @@ class BatchApplier:
                     F.col("_arrival").cast("int").alias("order"), "_arrival",
                 )
             )
-            _with_doc_bucket(
-                add_rows.select([f.name for f in DOC_SCHEMA.fields])
-            ).repartition(1).write.mode("append").partitionBy(
-                "doc_bucket"
-            ).parquet(path)
+            store.append_versions(db, col, add_rows)
 
-        # State after this block's adds, shared by update + delete checks —
-        # pinned to an explicit file list. Parquet files are immutable, so
-        # every plan built from this snapshot stays stable even when lazily
-        # re-evaluated after this block's own U/D appends land in the same
-        # directory (a directory-listing read would see the block's own
-        # tombstones on recompute and mis-validate the block's deletes).
-        # Only built when updates/deletes exist (colinfo; no probe jobs).
+        # State after this block's adds, shared by the update and delete
+        # checks and the merge. current_state keeps its file listing, so
+        # plans re-evaluated after this block's own U/D append (the log
+        # rows below) still read the state before it; a fresh read would
+        # see the block's own tombstones and drop its deletes from the
+        # log. Cached only for the two checks: Spark re-lists a cached
+        # frame when it writes under the frame's directory. Only built
+        # when updates/deletes exist (colinfo; no probe jobs).
         state_df = None
         if colinfo["has_upd"] or colinfo["has_del"]:
-            state_df = self._pinned_state(path).persist()
+            state_df = store.current_state(db, col).persist()
+        changed = []  # U versions and D tombstones: one append
 
         # ---- updates: atomic ownership check, fold patch chains, one merge
         if colinfo["has_upd"]:
@@ -789,21 +715,17 @@ class BatchApplier:
                     "doc_id", fold(F.col("_chain")).alias("_patch"), "_last"
                 )
             )
-            merged = (
-                state_df.join(folded, "doc_id")
-                .select(
+            changed.append(
+                state_df.join(folded, "doc_id").select(
                     "doc_id", "owner",
                     merge(F.col("doc"), F.col("_patch")).alias("doc"),
                     F.lit("U").alias("op"), F.lit(block).alias("block"),
                     F.col("_last").cast("int").alias("order"),
                 )
             )
-            _with_doc_bucket(merged).repartition(1).write.mode(
-                "append"
-            ).partitionBy("doc_bucket").parquet(path)
             ok_arrivals.append(ok_upd)
 
-        # ---- deletes: atomic ownership check, one tombstone append
+        # ---- deletes: atomic ownership check, tombstones
         if colinfo["has_del"]:
             deletes = muts.filter(F.col("_action") == "delete_document")
             del_exploded = deletes.select(
@@ -811,21 +733,19 @@ class BatchApplier:
             )
             ok_del, rej = self._atomic_check(del_exploded, state_df, deletes)
             rejected += rej
-            _with_doc_bucket(
-                del_exploded.join(ok_del, "_arrival")
-                .select(
+            changed.append(
+                del_exploded.join(ok_del, "_arrival").select(
                     "doc_id", F.col("sender").alias("owner"),
                     F.lit(None).cast("string").alias("doc"),
                     F.lit("D").alias("op"), F.lit(block).alias("block"),
                     F.col("_arrival").cast("int").alias("order"),
                 )
-            ).repartition(1).write.mode("append").partitionBy(
-                "doc_bucket"
-            ).parquet(path)
+            )
             ok_arrivals.append(ok_del)
 
         if state_df is not None:
             state_df.unpersist()
+            store.append_versions(db, col, reduce(DataFrame.unionByName, changed))
 
         # ---- log rows for accepted mutations of this collection
         ok_all = ok_arrivals[0]

@@ -116,6 +116,17 @@ DOC_READ_SCHEMA = T.StructType(
 )
 
 
+def _with_bucket(df: DataFrame, bucket: str) -> DataFrame:
+    """Add a bucketed table's partition column: ``doc_bucket`` for
+    collection versions, ``block_bucket`` for the mutation log and the
+    wire archive. Each layout rule is written here and nowhere else."""
+    key, size = {
+        "doc_bucket": ("doc_id", DOC_IDS_PER_BUCKET),
+        "block_bucket": ("block", LOG_BLOCKS_PER_BUCKET),
+    }[bucket]
+    return df.withColumn(bucket, F.expr(f"{key} div {size}"))
+
+
 def derive_db_addr(sender: str, nonce: int, network: int = 1) -> str:
     """Deterministic 20-byte database address from (sender, nonce, network).
 
@@ -137,6 +148,14 @@ def derive_db_addr(sender: str, nonce: int, network: int = 1) -> str:
         + sender_bytes
     ).hexdigest()
     return "0x" + h[:40]
+
+
+def _count_rows(df: DataFrame) -> int:
+    """Row count in one job past the input's shuffles: the partition
+    sizes are summed on the driver, where ``DataFrame.count`` adds an
+    aggregate exchange, and so a job, once the input has several
+    partitions."""
+    return df._jdf.rdd().count()
 
 
 def _latest_by(rows, key) -> dict:
@@ -177,9 +196,6 @@ class DocStore:
         self._catalog_cache: tuple | None = None
         # collection-name length cap: collection_key.rs:21-33
         self.max_col_name = 20
-        # bounded FIFO of persisted RunQuery matched-sets (see query_docs)
-        self._query_caches: list = []
-        self.query_cache_slots = 8
         # wire-envelope archive buffer: rows accumulate in memory and
         # flush ONE parquet file per closed block (the reference's
         # natural batching unit, mutation_store.rs:444-481) instead of
@@ -279,7 +295,9 @@ class DocStore:
         rewrite (cleanup keeps the immediately-superseded generation as a
         grace window for in-flight scans — the standard lakehouse
         retention trade; a scan outliving two rewrites can still lose its
-        files).
+        files). Before the first rewrite the live table is the root
+        itself, so the first rewrite keeps the root-level entries as that
+        predecessor and the second removes them.
         """
         cur = self._current_gen(root)
         n = int(cur[len(GEN_PREFIX):]) + 1 if cur else 1
@@ -288,23 +306,56 @@ class DocStore:
         self._flip_pointer(root, gen)
         # everything in the root except the pointer, the live generation
         # and its immediate predecessor (the in-flight-reader grace
-        # window) is superseded: older generations, legacy root-level
-        # data files, leftovers of crashed rewrites
-        keep = {gen, CURRENT_POINTER} | ({cur} if cur else set())
+        # window) is superseded: older generations, root-level data
+        # files, leftovers of crashed rewrites
         for name in self.fs.listdir(root):
-            if name not in keep:
-                self.fs.delete(os.path.join(root, name), recursive=True)
+            if name in (gen, CURRENT_POINTER, cur):
+                continue
+            if cur is None and not name.startswith(GEN_PREFIX):
+                continue  # the root-level predecessor
+            self.fs.delete(os.path.join(root, name), recursive=True)
 
-    def _append(self, rows: list[dict], schema: T.StructType, path: str) -> None:
+    # -- appends: request-sized rows from the driver, and sets --
+
+    def _append_rows(
+        self, rows: list[dict], schema: T.StructType, path: str,
+        bucket: str | None = None,
+    ) -> None:
+        """Append one request's rows: one file, or one per bucket touched
+        (normally one)."""
         df = self.spark.createDataFrame(rows, schema=schema)
-        df.coalesce(1).write.mode("append").parquet(path)
+        if bucket is None:
+            df.coalesce(1).write.mode("append").parquet(path)
+        else:
+            _with_bucket(df, bucket).coalesce(1).write.mode(
+                "append"
+            ).partitionBy(bucket).parquet(path)
 
-    def _append_doc_rows(self, rows: list[dict], path: str) -> None:
-        """Append doc-version rows under the doc-bucket partition layout."""
-        df = self.spark.createDataFrame(rows, schema=DOC_SCHEMA).withColumn(
-            "doc_bucket", F.expr(f"doc_id div {DOC_IDS_PER_BUCKET}")
+    def _append_set(self, df: DataFrame, path: str, bucket: str) -> None:
+        """Append a Spark-computed set: repartitioned on its bucket, so
+        each bucket touched gets one file and distinct buckets write in
+        parallel."""
+        _with_bucket(df, bucket).repartition(bucket).write.mode(
+            "append"
+        ).partitionBy(bucket).parquet(path)
+
+    def append_versions(self, db_addr: str, col: str, df: DataFrame) -> None:
+        """Append a set of version rows (the DOC_SCHEMA columns of ``df``)
+        to a collection's live generation. The set-wise writers (block
+        apply, replay, event TTL) use this; the request-sized mutations
+        use ``_append_rows``."""
+        self._append_set(
+            df.select(DOC_SCHEMA.fieldNames()),
+            self._data_path(db_addr, col), "doc_bucket",
         )
-        df.coalesce(1).write.mode("append").partitionBy("doc_bucket").parquet(path)
+        self._note_append(db_addr, col)
+
+    def append_log(self, df: DataFrame) -> None:
+        """Append a set of mutation-log rows (the LOG_SCHEMA columns of
+        ``df``) to the live log."""
+        self._append_set(
+            df.select(LOG_SCHEMA.fieldNames()), self._log_path(), "block_bucket"
+        )
 
     def _read(
         self, path: str, schema: T.StructType, names: list[str] | None = None
@@ -398,12 +449,7 @@ class DocStore:
             "block": block,
             "order": order,
         }
-        df = self.spark.createDataFrame([row], schema=LOG_SCHEMA).withColumn(
-            "block_bucket", F.expr(f"block div {LOG_BLOCKS_PER_BUCKET}")
-        )
-        df.coalesce(1).write.mode("append").partitionBy("block_bucket").parquet(
-            self._log_path()
-        )
+        self._append_rows([row], LOG_SCHEMA, self._log_path(), "block_bucket")
 
     # ------------------------------------------------------------------
     # catalog — databases & collections (M0, M1, M5, M7, M8)
@@ -546,7 +592,7 @@ class DocStore:
             raise InvalidMutation("create without nonce needs an explicit db_addr")
         addr = db_addr or derive_db_addr(sender, nonce, self.network)
         block, order = self._seq(seq)
-        self._append(
+        self._append_rows(
             [
                 {
                     "db_addr": addr, "sender": sender, "desc": desc,
@@ -584,12 +630,29 @@ class DocStore:
                 )
         return addr
 
+    def tombstone_database(
+        self, db_addr: str, sender: str, block: int, order: int
+    ) -> None:
+        """M6's catalog effect: a delete-marker row (db_type='deleted')
+        that hides the database and its collections."""
+        self._append_rows(
+            [
+                {
+                    "db_addr": db_addr, "sender": sender, "desc": "__deleted__",
+                    "db_type": "deleted", "meta": None,
+                    "block": block, "order": order,
+                }
+            ],
+            self.DB_SCHEMA,
+            self._db_path(),
+        )
+
     def _create_collection_raw(
         self, db_addr, name, indexes, sender, seq=None, mid=None,
         nonce: int = 0, log: bool = True,
     ):
         block, order = self._seq(seq)
-        self._append(
+        self._append_rows(
             [
                 {
                     "db_addr": db_addr, "col_name": name,
@@ -647,7 +710,7 @@ class DocStore:
                 raise IndexAlreadyExists(idx["path"])
         merged = json.loads(row["index_fields"] or "[]") + list(new_indexes)
         block, order = self._seq(seq)
-        self._append(
+        self._append_rows(
             [
                 {
                     "db_addr": db_addr, "col_name": name,
@@ -672,10 +735,22 @@ class DocStore:
     def current_state(self, db_addr: str, col: str) -> DataFrame:
         """Merge-on-read view: latest version per doc_id, tombstones dropped.
 
-        The scan path (queries, compaction, exports): one window with a
-        hash shuffle on doc_id. A known id set — point get, ownership
-        check, update merge — goes through ``_latest_versions`` instead,
-        which needs neither the window nor the shuffle.
+        The scan path (queries, compaction, exports, block apply, replay):
+        one window with a hash shuffle on doc_id. A known id set — point
+        get, ownership check, update merge — goes through
+        ``_latest_versions`` instead, which needs neither the window nor
+        the shuffle.
+
+        The returned DataFrame keeps the file listing it was built from:
+        every action on it, or on a frame derived from it, reads the same
+        files, however many appends land after it was built. A caller that
+        appends to the collection and then re-evaluates a frame built
+        before the append (the block applier's log rows, replay's update
+        merge) therefore sees the state before its own append. Two limits:
+        while a frame over the collection is persisted, Spark re-lists it
+        on every write under the collection's directory, and frames with
+        the same plan read that cache; and a frame held across two
+        compactions can lose its files (see ``_rewrite``).
         """
         self._require_col(db_addr, col)
         df = self._read_docs(self._data_path(db_addr, col))
@@ -745,7 +820,9 @@ class DocStore:
             }
             for i, d in zip(ids, docs)
         ]
-        self._append_doc_rows(rows, self._data_path(db_addr, col))
+        self._append_rows(
+            rows, DOC_SCHEMA, self._data_path(db_addr, col), "doc_bucket"
+        )
         self._log(sender, nonce or 0, "add_document", db_addr, col,
                   {"docs": docs}, ids, block, order, mid=mid)
         self._note_append(db_addr, col)
@@ -790,7 +867,9 @@ class DocStore:
             }
             for i, p in zip(ids, patches)
         ]
-        self._append_doc_rows(rows, self._data_path(db_addr, col))
+        self._append_rows(
+            rows, DOC_SCHEMA, self._data_path(db_addr, col), "doc_bucket"
+        )
         self._log(sender, nonce or 0, "update_document", db_addr, col,
                   {"patches": patches}, ids, block, order, mid=mid)
         self._note_append(db_addr, col)
@@ -813,7 +892,9 @@ class DocStore:
             }
             for i in ids
         ]
-        self._append_doc_rows(rows, self._data_path(db_addr, col))
+        self._append_rows(
+            rows, DOC_SCHEMA, self._data_path(db_addr, col), "doc_bucket"
+        )
         self._log(sender, nonce or 0, "delete_document", db_addr, col,
                   None, ids, block, order, mid=mid)
         self._note_append(db_addr, col)
@@ -829,59 +910,50 @@ class DocStore:
         return self._latest_versions(db_addr, col, [doc_id]).get(int(doc_id))
 
     def query_docs(
-        self, db_addr: str, col: str, query: str, params=None
-    ) -> tuple[DataFrame, int]:
-        """IndexerNode.RunQuery: JQL over one collection, returns (docs, count).
+        self, db_addr: str, col: str, query: str, params=None,
+        offset: int = 0, limit: int | None = None,
+    ) -> tuple[list, int]:
+        """IndexerNode.RunQuery: JQL over one collection, returns
+        ``(rows, count)``.
 
         The count accompanies every response (RunQueryResponse{documents,
         count} — db3_indexer.proto:36-38). Count reflects the *matched* set
-        (pre-limit), like doc_store.rs:208-213.
+        (pre-limit), like doc_store.rs:208-213. A ``| count`` query returns
+        no rows and costs one count. Otherwise ``rows`` is the page of the
+        query's result that starts ``offset`` rows in and holds at most
+        ``limit`` rows (all of them when ``limit`` is None).
 
-        One pass over the collection: the matched set is materialized once
-        as an eager ``localCheckpoint`` — the count and the returned
-        documents both read that immutable snapshot instead of re-running
-        the state window.
-
-        The snapshot, not a recomputable cache, is what makes the
-        ``(rows, count)`` pair durable in this single-writer store where
-        the same process both queries and appends: a recomputing plan
-        (persist + later eviction) would re-scan the live collection
-        directory, so rows collected after an intervening append could
-        diverge from the count returned with them. A checkpointed result
-        can never drift — it no longer references the source files at all.
-
-        The bounded FIFO (``query_cache_slots``, 8 by default) holds OUR
-        references so a long-lived node's query traffic cannot accumulate
-        snapshots it no longer serves; eviction just drops the store's
-        reference — a caller still holding the result keeps its snapshot
-        alive (executor block storage frees on GC via the ContextCleaner).
-        ``release_query_caches()`` drops them all.
-
-        Deployment note: ``localCheckpoint`` blocks are deliberately NOT
-        recomputable — that is the drift guarantee above — so losing an
-        executor that holds them fails later reads of that snapshot.
-        Run the storage node's executors static (no dynamic allocation /
-        spot kills), exactly as Spark's own localCheckpoint docs require;
-        a lost snapshot is recovered by re-running the query.
+        The matched set is persisted for the duration of the call only:
+        the count fills it, the page reads it in one task (a limit is then
+        one job, not a take that widens over the partitions), and it is
+        released before returning. Count and rows come from one
+        ``current_state`` frame; an append from another thread that lands
+        between the count and the page re-lists the persisted set (see
+        ``current_state``), so the two can then straddle that append.
         """
         from rtstore_spark.jql.compiler import apply_stages, compile_predicate
         from rtstore_spark.jql.parser import parse_jql
 
         q = parse_jql(query)
         state_df = self.current_state(db_addr, col)
-        pred = compile_predicate(q, state_df, params=params, doc_col="doc")
-        matched_df = state_df.filter(pred).localCheckpoint(eager=True)
-        self._query_caches.append(matched_df)
-        while len(self._query_caches) > self.query_cache_slots:
-            self._query_caches.pop(0)
-        matched = matched_df.count()
-        out = apply_stages(matched_df, q, doc_col="doc", order_col="doc_id")
-        return out, matched
-
-    def release_query_caches(self) -> None:
-        """Drop the store's references to every RunQuery snapshot (callers
-        still holding results keep their own snapshots alive)."""
-        self._query_caches.clear()
+        matched_df = state_df.filter(
+            compile_predicate(q, state_df, params=params, doc_col="doc")
+        )
+        if any(a.kind == "count" for a in q.applies):
+            return [], _count_rows(matched_df)
+        matched_df.persist()
+        try:
+            count = _count_rows(matched_df)
+            page = apply_stages(
+                matched_df.coalesce(1), q, doc_col="doc", order_col="doc_id"
+            )
+            if offset:
+                page = page.offset(offset)
+            if limit is not None:
+                page = page.limit(limit)
+            return page.collect(), count
+        finally:
+            matched_df.unpersist()
 
     # ------------------------------------------------------------------
     # maintenance — compaction (the scale path for merge-on-read)
@@ -935,10 +1007,7 @@ class DocStore:
         self._rewrite(
             self._data_root(db_addr, col),
             lambda dest: (
-                snap.select([f.name for f in DOC_SCHEMA.fields])
-                .withColumn(
-                    "doc_bucket", F.expr(f"doc_id div {DOC_IDS_PER_BUCKET}")
-                )
+                _with_bucket(snap.select(DOC_SCHEMA.fieldNames()), "doc_bucket")
                 .repartition("doc_bucket")
                 # partition col leads the sort: the dynamic-partition writer
                 # requires ordering by partition columns and would insert its
@@ -1107,6 +1176,25 @@ class DocStore:
             .parquet(*parts)
         )
 
+    def drop_log_buckets_before(self, block: int) -> int:
+        """Delete the log's ``block_bucket=`` directories that lie wholly
+        below ``block`` (the bucket holding ``block`` stays); returns the
+        payload bytes they held. Plain deletes: the log path does not
+        move, so streams tailing it keep their source."""
+        below = block // LOG_BLOCKS_PER_BUCKET
+        removed = (
+            self.mutation_log()
+            .filter(F.col("block_bucket") < below)
+            .agg(F.coalesce(F.sum(F.length("payload")), F.lit(0)).alias("s"))
+            .collect()[0]["s"]
+        )
+        path = self._log_path()
+        for entry in self.fs.listdir(path):
+            name, _, bucket = entry.partition("=")
+            if name == "block_bucket" and bucket.isdigit() and int(bucket) < below:
+                self.fs.delete(os.path.join(path, entry), recursive=True)
+        return int(removed)
+
     def get_mutation(self, tx_id: str):
         """GetMutationHeader/GetMutationBody: point lookup by mutation id."""
         rows = self.mutation_log().filter(F.col("id") == tx_id).head(1)
@@ -1165,15 +1253,13 @@ class DocStore:
         # block_bucket partition touched (normally exactly one)
         if not rows:
             return
-        df = self.spark.createDataFrame(
-            rows, schema=WIRE_ARCHIVE_SCHEMA,
-        ).withColumn("block_bucket", F.expr(f"block div {LOG_BLOCKS_PER_BUCKET}"))
         # appends land in the live generation (pointer-resolved) so
         # compact_wire_archive's snapshot rewrites fold them in
         try:
-            df.coalesce(1).write.mode("append").partitionBy(
-                "block_bucket"
-            ).parquet(self._resolve(self._wire_archive_path()))
+            self._append_rows(
+                rows, WIRE_ARCHIVE_SCHEMA,
+                self._resolve(self._wire_archive_path()), "block_bucket",
+            )
         except Exception:
             # callers swap rows OUT of the buffer before flushing; if the
             # parquet write fails transiently (fs hiccup), losing closed-
@@ -1249,12 +1335,8 @@ class DocStore:
                 .parquet(*files)
             )
         if pending:
-            mem = self.spark.createDataFrame(
-                pending, schema=WIRE_ARCHIVE_SCHEMA
-            ).withColumn(
-                "block_bucket", F.expr(f"block div {LOG_BLOCKS_PER_BUCKET}")
-            )
-            df = df.unionByName(mem)
+            mem = self.spark.createDataFrame(pending, schema=WIRE_ARCHIVE_SCHEMA)
+            df = df.unionByName(_with_bucket(mem, "block_bucket"))
         end = block_end if block_end is not None else (1 << 62)
         lo = block_start // LOG_BLOCKS_PER_BUCKET
         hi = (max(end - 1, block_start)) // LOG_BLOCKS_PER_BUCKET

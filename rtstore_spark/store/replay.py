@@ -20,7 +20,7 @@ independent of the mutation count:
      so replica ids match the origin exactly;
    - updates: per-doc patch chains fold in (block, order) order into ONE
      equivalent RFC-7386 patch (``make_fold_patches``), merged against the
-     pinned pre-update state (pre-batch files ∪ this batch's adds) and
+     pre-update state (pre-batch files ∪ this batch's adds) and
      appended as one U version at the chain's last (block, order);
    - deletes: one exploded tombstone append.
    Folding is equivalence-preserving for a valid origin log: per doc the
@@ -48,18 +48,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from rtstore_spark.errors import CollectionNotFound
-from rtstore_spark.store.batch_apply import (
-    _DOC_ACTIONS,
-    _with_doc_bucket,
-    make_fold_patches,
-    pinned_state,
-)
 from rtstore_spark.functions.merge_patch import make_json_merge_patch
-from rtstore_spark.store.docstore import (
-    DOC_SCHEMA,
-    LOG_BLOCKS_PER_BUCKET,
-    LOG_SCHEMA,
-)
+from rtstore_spark.store.batch_apply import _DOC_ACTIONS, make_fold_patches
+from rtstore_spark.store.docstore import LOG_SCHEMA
 
 _PAYLOAD = "docs array<string>, patches array<string>"
 
@@ -73,9 +64,10 @@ def _replay_collection(
     replica, db: str, col: str, actions: set, doc: DataFrame
 ) -> None:
     """One collection's document ops from a replayed batch — adds, folded
-    updates, deletes, in that order (the pinned state for updates must see
-    this batch's adds). Runs on a pool thread; everything it touches is
-    collection-local (the data directory, the append counter note)."""
+    updates, deletes, in that order (the state the updates merge against
+    must see this batch's adds). Runs on a pool thread; everything it
+    touches is collection-local (the data directory, the append counter
+    note)."""
     # UDF wrappers are created per call: pandas-UDF objects are cheap, and
     # per-thread instances avoid sharing one lazily-registered function
     # across concurrently-built plans
@@ -84,11 +76,8 @@ def _replay_collection(
     muts = doc.filter(
         (F.col("db_addr") == db) & (F.col("col_name") == col)
     )
-    path = replica._data_path(db, col)
 
-    # ---- adds first: logged ids ∥ docs, one exploded append.
-    # repartition on doc_bucket keeps the write parallel across
-    # buckets while still producing one file per bucket.
+    # ---- adds first: logged ids ∥ docs, one exploded append
     if "add_document" in actions:
         add_rows = (
             muts.filter(F.col("action") == "add_document")
@@ -104,18 +93,13 @@ def _replay_collection(
                 F.lit("A").alias("op"), "block", "order",
             )
         )
-        _with_doc_bucket(
-            add_rows.select([f.name for f in DOC_SCHEMA.fields])
-        ).repartition(F.col("doc_bucket")).write.mode(
-            "append"
-        ).partitionBy("doc_bucket").parquet(path)
+        replica.append_versions(db, col, add_rows)
 
-    # state for the update merge: pinned AFTER the adds append, so
-    # the frozen file list covers pre-batch files ∪ this batch's
-    # adds — and, files being immutable, stays valid while the U/D
-    # appends below land in the same directory
+    # state for the update merge: read AFTER the adds append, so its
+    # file listing covers pre-batch files ∪ this batch's adds, and
+    # kept by the frame while the U/D appends below land
     if "update_document" in actions:
-        state_df = pinned_state(replica, path)
+        state_df = replica.current_state(db, col)
         upd = (
             muts.filter(F.col("action") == "update_document")
             .select(
@@ -150,9 +134,7 @@ def _replay_collection(
             merge(F.col("doc"), F.col("_patch")).alias("doc"),
             F.lit("U").alias("op"), "block", "order",
         )
-        _with_doc_bucket(merged).repartition(
-            F.col("doc_bucket")
-        ).write.mode("append").partitionBy("doc_bucket").parquet(path)
+        replica.append_versions(db, col, merged)
 
     if "delete_document" in actions:
         del_rows = (
@@ -167,11 +149,7 @@ def _replay_collection(
                 F.lit("D").alias("op"), "block", "order",
             )
         )
-        _with_doc_bucket(del_rows).repartition(
-            F.col("doc_bucket")
-        ).write.mode("append").partitionBy("doc_bucket").parquet(path)
-
-    replica._note_append(db, col)
+        replica.append_versions(db, col, del_rows)
 
 
 def replay_log_batch(replica, batch_df: DataFrame) -> int:
@@ -240,7 +218,7 @@ def replay_log_batch(replica, batch_df: DataFrame) -> int:
             # schedules concurrent jobs from one driver, so a batch that
             # touches 50 collections overlaps its writes instead of paying
             # 50 sequential driver-blocking rounds. Within one collection
-            # the adds → pinned-state → updates → deletes order is
+            # the adds → state read → updates → deletes order is
             # preserved (it is one task). Pool size caps driver memory and
             # scheduler pressure; errors propagate after all tasks settle
             # (fail-fast would leave sibling writes mid-flight).
@@ -269,11 +247,7 @@ def replay_log_batch(replica, batch_df: DataFrame) -> int:
         snapshot = _converge_aggregates(batch, doc, has_doc_ops=True)
 
         # -- 3b. the log: origin rows verbatim, one distributed append
-        doc.select([f.name for f in LOG_SCHEMA.fields]).withColumn(
-            "block_bucket", F.expr(f"block div {LOG_BLOCKS_PER_BUCKET}")
-        ).repartition(F.col("block_bucket")).write.mode("append").partitionBy(
-            "block_bucket"
-        ).parquet(replica._log_path())
+        replica.append_log(doc)
 
         # -- 4. sequencer convergence (fold AFTER the append so a crash
         # between 3b and 4 leaves watermarks behind the log, never ahead

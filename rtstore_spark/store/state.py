@@ -107,6 +107,11 @@ class StateStore:
 
     # -- per-database sequential doc ids: db_store_v2.rs:358-398 --
 
+    def doc_counter(self, db_addr: str) -> int:
+        """Highest doc id assigned in a database (0 = none yet)."""
+        with self.lock:
+            return self._state["doc_counters"].get(db_addr, 0)
+
     def take_doc_ids(self, db_addr: str, n: int, start_id: int = 1) -> list[int]:
         with self.lock:
             cur = self._state["doc_counters"].get(db_addr, start_id - 1)

@@ -91,3 +91,15 @@ def test_show_database_by_owner(spark, tmp_path):
     bob.createDocumentDatabase("b1")
     assert len(alice.showDatabase(owner=ALICE)) == 1
     assert len(alice.showDatabase()) == 2
+
+
+def test_checksummed_sender_nonces_advance(spark, tmp_path):
+    """A mixed-case (EIP-55 style) sender is one account with its
+    lowercase form: the client's next nonce must read the same key the
+    store advanced, so a second create does not reuse a nonce."""
+    sender = "0x" + "Ab" * 20
+    client = Client(spark, str(tmp_path / "wh"), sender)
+    first = client.createDocumentDatabase("one")
+    second = client.createDocumentDatabase("two")
+    assert first != second
+    assert client.store.state.nonce_of(sender) == 2

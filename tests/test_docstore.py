@@ -196,6 +196,32 @@ class TestJobCounts:
         assert json.loads(store.get_doc(db, "c", ids[0])["doc"]) == {"a": 1, "b": 1}
         assert store.get_doc(db, "c", ids[1]) is None
 
+    def test_run_query_jobs(self, spark, tmp_path):
+        """RunQuery: a page query counts and collects the matched set in
+        at most four jobs; a ``| count`` query is one count, at most two
+        jobs (the window's shuffle stage and the count)."""
+        store = DocStore(spark, str(tmp_path / "qjobs"))
+        db = store.create_database(ALICE, nonce=1)
+        store.create_collection(db, "c", [], ALICE)
+        store.add_docs(db, "c", [json.dumps({"v": i}) for i in range(8)], ALICE)
+        store.add_docs(db, "c", ['{"v": 100}'], ALICE)
+        sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+        def jobs(fn):
+            before = int(sched.nextJobId())
+            out = fn()
+            return int(sched.nextJobId()) - before, out
+
+        store._require_col(db, "c")  # warm the catalog
+        n, (rows, count) = jobs(
+            lambda: store.query_docs(db, "c", "/[v >= 3]", offset=1, limit=3)
+        )
+        assert n <= 4, f"page query took {n} jobs"
+        assert count == 6 and len(rows) == 3
+        n, (rows, count) = jobs(lambda: store.query_docs(db, "c", "/* | count"))
+        assert n <= 2, f"| count took {n} jobs"
+        assert rows == [] and count == 9
+
 
 class TestMergeParity:
     # (stored document, patch): a nested object patch, a null that
@@ -247,6 +273,41 @@ class TestMergeParity:
         assert len(got["driver"]) == len(self.CASES)
 
 
+class TestBlockApplyAutoCompaction:
+    def test_block_with_compacting_appends_logs_every_mutation(self, spark, tmp_path):
+        """A block's update and delete, with auto-compaction after every
+        append: the compacted state holds both, and the log holds both
+        mutations. The block's log rows re-read the state the checks saw,
+        not the state after its own tombstones."""
+        from rtstore_spark.store.batch_apply import BatchApplier
+        from rtstore_spark.store.ingest import Ingest
+
+        store = DocStore(spark, str(tmp_path / "ac"), auto_compact_every=1,
+                         auto_compact_max_files=0)
+        db = store.create_database(ALICE, nonce=1)
+        store.create_collection(db, "c", [], ALICE)
+        ids = store.add_docs(db, "c", ['{"v": 1}', '{"v": 2}', '{"v": 3}'], ALICE)
+        envs = []
+        for nonce, body in (
+            (2, {"ids": [ids[0]], "patches": ['{"v": 10}']}),
+            (3, {"ids": [ids[1]]}),
+        ):
+            payload = json.dumps({
+                "action": "update_document" if "patches" in body else "delete_document",
+                "db_addr": db, "col_name": "c", "body": body,
+            }, sort_keys=True)
+            envs.append({"payload": payload, "sender": ALICE, "nonce": nonce,
+                         "signature": digest_signature(payload, nonce, ALICE)})
+        staged = str(tmp_path / "envs.parquet")
+        spark.createDataFrame(envs).coalesce(1).write.parquet(staged)
+        assert BatchApplier(Ingest(store)).apply(spark.read.parquet(staged)) == []
+        state = {r["doc_id"]: json.loads(r["doc"])["v"]
+                 for r in store.current_state(db, "c").collect()}
+        assert state == {ids[0]: 10, ids[2]: 3}
+        logged = {r["action"] for r in store.mutation_log().collect()}
+        assert {"update_document", "delete_document"} <= logged
+
+
 class TestDocumentCRUD:
     def test_add_docs_sequential_ids(self, store, db_col):
         db, col = db_col
@@ -267,12 +328,11 @@ class TestDocumentCRUD:
         db, col = db_col
         store.add_docs(db, col, ['{"city": "beijing", "age": 10}'], ALICE)
         store.add_docs(db, col, ['{"city": "beijing2", "age": 20}'], ALICE)
-        out, count = store.query_docs(db, col, "/[city = beijing]")
+        rows, count = store.query_docs(db, col, "/[city = beijing]")
         assert count == 1
-        assert json.loads(out.collect()[0]["doc"])["city"] == "beijing"
+        assert json.loads(rows[0]["doc"])["city"] == "beijing"
         # count reflects matched set pre-limit (doc_store.rs:208-213)
-        out2, count2 = store.query_docs(db, col, "/* | limit 1")
-        rows = out2.collect()
+        rows, count2 = store.query_docs(db, col, "/* | limit 1")
         assert count2 == 2 and len(rows) == 1
         # newest-first: limit 1 yields the LAST insert (client_v2.test.ts:213-239)
         assert json.loads(rows[0]["doc"])["city"] == "beijing2"
@@ -354,29 +414,21 @@ class TestDocumentCRUD:
         store.update_docs(db, "c", [7], ['{"u": 1}'], ALICE)
         assert json.loads(store.get_doc(db, "c", 7)["doc"])["u"] == 1
 
-    def test_query_cache_bounded(self, store, db_col):
-        """RunQuery snapshots its matched set for the one-pass count+read;
-        the FIFO of store-held references must stay bounded, and an evicted
-        result must keep returning its snapshot rows — even after an
-        intervening append, since the (rows, count) pair the caller holds
-        must never drift from what was returned with it."""
+    def test_query_cache_bounded(self, spark, store, db_col):
+        """RunQuery keeps nothing cached once it returns, and what it
+        returned does not move: a held (rows, count) is unchanged by a
+        later append, while a fresh query sees the append."""
         db, col = db_col
         store.add_docs(db, col, ['{"city": "cached"}'], ALICE)
-        results = [
-            store.query_docs(db, col, "/[city = cached]")
-            for _ in range(store.query_cache_slots + 3)
-        ]
-        assert len(store._query_caches) == store.query_cache_slots
-        first_df, first_count = results[0]  # evicted by now
-        # a write AFTER the query must not leak into the held result
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        for _ in range(3):
+            rows, count = store.query_docs(db, col, "/[city = cached]")
+            assert cache.isEmpty()
         store.add_docs(db, col, ['{"city": "cached"}'], ALICE)
-        assert first_count == 1 and first_df.count() == 1
-        store.release_query_caches()
-        assert not store._query_caches
-        assert results[-1][0].count() == 1
-        # a fresh query sees the new doc
-        _, n = store.query_docs(db, col, "/[city = cached]")
-        assert n == 2
+        assert count == 1 and len(rows) == 1
+        rows2, n = store.query_docs(db, col, "/[city = cached]")
+        assert n == 2 and len(rows2) == 2
+        assert cache.isEmpty()
 
     def test_update_merge_patch_preserves_fields(self, store, db_col):
         # EJDB2 patch semantics: doc_store.rs:470-480 — patching
@@ -473,7 +525,9 @@ class TestDocumentCRUD:
         store.compact(db, "c")
         files = sorted(
             glob.glob(
-                str(tmp_path / "widx" / "data" / db / "c" / "**" / "*.parquet"),
+                # the live generation: the pre-compaction files stay in the
+                # root as the grace-window predecessor
+                store._data_path(db, "c") + "/**/*.parquet",
                 recursive=True,
             )
         )
@@ -482,6 +536,50 @@ class TestDocumentCRUD:
             rows += pq.read_table(f, columns=["doc"]).to_pylist()
         got = [json.loads(r["doc"])["age"] for r in rows]
         assert got == sorted(ages)  # physical order = index order
+
+
+class TestHeldState:
+    """``current_state`` keeps the file listing it was built from — the
+    contract the block applier, replay and RunQuery build on."""
+
+    @pytest.mark.parametrize("uri", [False, True], ids=["local", "file_uri"])
+    def test_held_frame_ignores_later_appends(self, spark, tmp_path, uri):
+        root = str(tmp_path / "held")
+        store = DocStore(spark, "file://" + root if uri else root)
+        db = store.create_database(ALICE, nonce=1)
+        store.create_collection(db, "c", [], ALICE)
+        store.add_docs(db, "c", ['{"v": 1}', '{"v": 2}', '{"v": 3}'], ALICE)
+        held = store.current_state(db, "c")
+
+        def ids(df):
+            return sorted(r["doc_id"] for r in df.collect())
+
+        assert ids(held) == [1, 2, 3]
+        store.add_docs(db, "c", ['{"v": 4}'], ALICE)
+        store.delete_docs(db, "c", [1], ALICE)
+        assert ids(held) == [1, 2, 3]
+        assert ids(store.current_state(db, "c")) == [2, 3, 4]
+
+    def test_held_frame_survives_first_compaction(self, spark, tmp_path):
+        """Before its first compaction a collection's live table is its
+        root; that rewrite keeps the root-level files as the predecessor
+        generation, so a frame read before it still finds its files. The
+        second compaction retires them."""
+        store = DocStore(spark, str(tmp_path / "grace"))
+        db = store.create_database(ALICE, nonce=1)
+        store.create_collection(db, "c", [], ALICE)
+        store.add_docs(db, "c", ['{"v": 1}', '{"v": 2}'], ALICE)
+        store.delete_docs(db, "c", [1], ALICE)
+        held = store.current_state(db, "c")
+        store.compact(db, "c")
+        assert [r["doc_id"] for r in held.collect()] == [2]
+        store.add_docs(db, "c", ['{"v": 3}'], ALICE)
+        store.compact(db, "c")
+        root = store._data_root(db, "c")
+        assert all(n.startswith(("gen-", "_")) for n in store.fs.listdir(root))
+        assert sorted(
+            r["doc_id"] for r in store.current_state(db, "c").collect()
+        ) == [2, 3]
 
 
 class TestReplay:
@@ -585,8 +683,7 @@ class TestZOrderCompaction:
             return v
 
         files = sorted(
-            glob.glob(str(tmp_path / "wz" / "data" / db / "c" / "**" / "*.parquet"),
-                      recursive=True)
+            glob.glob(store._data_path(db, "c") + "/**/*.parquet", recursive=True)
         )
         rows = []
         for f in files:
@@ -663,8 +760,7 @@ class TestZOrderManyColumns:
 
         assert all(zval(p) >= 0 for p in pts)
         files = sorted(
-            glob.glob(str(tmp_path / "wz4" / "data" / db / "c" / "**" / "*.parquet"),
-                      recursive=True)
+            glob.glob(store._data_path(db, "c") + "/**/*.parquet", recursive=True)
         )
         rows = []
         for f in files:

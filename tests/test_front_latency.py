@@ -20,7 +20,6 @@ from rtstore_spark.wire import h2
 
 def test_json_front_keep_alive_responses_do_not_stall():
     # the 404 route answers before any store access, so no node is needed
-    # (it does not read a request body either, so the requests carry none)
     srv = NodeServer(node=None).start()
     try:
         conn = http.client.HTTPConnection("127.0.0.1", srv.port, timeout=10)
@@ -37,6 +36,23 @@ def test_json_front_keep_alive_responses_do_not_stall():
         srv.stop()
     # Nagle alone costs ~0.9 s for 20 keep-alive responses
     assert elapsed < 0.4, f"20 keep-alive responses took {elapsed:.3f} s"
+
+
+def test_json_front_no_route_with_body_keeps_connection_in_sync():
+    # an unread body would be parsed as the next request line
+    srv = NodeServer(node=None).start()
+    try:
+        conn = http.client.HTTPConnection("127.0.0.1", srv.port, timeout=10)
+        for _ in range(3):
+            conn.request("POST", "/nope", body=b'{"x": 1}',
+                         headers={"Content-Type": "application/json"})
+            resp = conn.getresponse()
+            assert resp.status == 404
+            assert resp.getheader("Content-Type") == "application/json"
+            resp.read()
+        conn.close()
+    finally:
+        srv.stop()
 
 
 def test_h2c_accepted_sockets_disable_nagle():

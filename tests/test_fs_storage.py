@@ -119,7 +119,14 @@ class TestPointerFlipCrashSafety:
         root = s._data_root(db, "c")
         live = s._current_gen(root)
         assert live is not None
-        assert set(s.fs.listdir(root)) == {live, CURRENT_POINTER}
+        # the orphan is gone; the root-level files stay as the
+        # predecessor generation until the next rewrite
+        names = set(s.fs.listdir(root))
+        assert {n for n in names if n.startswith("gen-")} == {live}
+        s.compact(db, "c")
+        assert set(s.fs.listdir(root)) == {
+            live, s._current_gen(root), CURRENT_POINTER
+        }
 
     def test_fresh_reader_resolves_pointer(self, store, spark):
         """A brand-new store instance (new reader process) must resolve the

@@ -95,17 +95,20 @@ class TestIngest:
         assert row["sender"] == ALICE and row["nonce"] == 1
 
     def test_query_docs_single_pass(self, ingest):
-        """query_docs returns docs + pre-limit matched count from one pass:
-        the documents plan must read the checkpointed matched snapshot, not
-        re-run the collection state window (no parquet scan of the
-        collection in the returned plan)."""
+        """query_docs returns the page and the pre-limit matched count of
+        one evaluation: ``limit`` caps the query's own ``| limit`` result,
+        ``offset`` pages through it, and the count stays the matched
+        total."""
         store = ingest.store
         db = store.create_database(ALICE, 1)
         store.create_collection(db, "c", sender=ALICE)
         store.add_docs(db, "c", [f'{{"v": {i}}}' for i in range(10)], ALICE)
-        out, matched = store.query_docs(db, "c", "/[v >= 3] | limit 2")
+        rows, matched = store.query_docs(db, "c", "/[v >= 3] | limit 4")
         assert matched == 7
-        assert out.count() == 2
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan  # the localCheckpoint snapshot
-        assert "FileScan" not in plan  # never back to the live files
+        # newest first: v 9, 8, 7, 6
+        assert [json.loads(r["doc"])["v"] for r in rows] == [9, 8, 7, 6]
+        rows, matched = store.query_docs(
+            db, "c", "/[v >= 3] | limit 4", offset=1, limit=2
+        )
+        assert matched == 7
+        assert [json.loads(r["doc"])["v"] for r in rows] == [8, 7]

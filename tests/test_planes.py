@@ -412,14 +412,14 @@ class TestEvmSource:
         counts = proc.process(JsonlLogSource(str(fixture)))
         assert counts == {"Transfer": 2, "Approval": 1}
 
-        out, n = store.query_docs(db, "Transfer", "/[from = 0xab]")
+        rows, n = store.query_docs(db, "Transfer", "/[from = 0xab]")
         assert n == 1
-        doc = json.loads(out.collect()[0]["doc"])
+        doc = json.loads(rows[0]["doc"])
         # uint256 survives as a decimal string (event_processor.rs:223-225)
         assert doc["value"] == str(2**200)
         # bool and arrays intact
-        out2, _ = store.query_docs(db, "Approval", "/*")
-        doc2 = json.loads(out2.collect()[0]["doc"])
+        rows2, _ = store.query_docs(db, "Approval", "/*")
+        doc2 = json.loads(rows2[0]["doc"])
         assert doc2["ok"] is True and doc2["ids"] == ["1", "2"]
 
     def test_from_block_filter(self, tmp_path):
