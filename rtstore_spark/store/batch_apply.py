@@ -680,9 +680,8 @@ class BatchApplier:
         # plans re-evaluated after this block's own U/D append (the log
         # rows below) still read the state before it; a fresh read would
         # see the block's own tombstones and drop its deletes from the
-        # log. Cached only for the two checks: Spark re-lists a cached
-        # frame when it writes under the frame's directory. Only built
-        # when updates/deletes exist (colinfo; no probe jobs).
+        # log. Only built when updates/deletes exist (colinfo; no probe
+        # jobs).
         state_df = None
         if colinfo["has_upd"] or colinfo["has_del"]:
             state_df = store.current_state(db, col).persist()
@@ -744,8 +743,8 @@ class BatchApplier:
             ok_arrivals.append(ok_del)
 
         if state_df is not None:
-            state_df.unpersist()
             store.append_versions(db, col, reduce(DataFrame.unionByName, changed))
+            state_df.unpersist()
 
         # ---- log rows for accepted mutations of this collection
         ok_all = ok_arrivals[0]

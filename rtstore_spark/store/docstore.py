@@ -150,14 +150,6 @@ def derive_db_addr(sender: str, nonce: int, network: int = 1) -> str:
     return "0x" + h[:40]
 
 
-def _count_rows(df: DataFrame) -> int:
-    """Row count in one job past the input's shuffles: the partition
-    sizes are summed on the driver, where ``DataFrame.count`` adds an
-    aggregate exchange, and so a job, once the input has several
-    partitions."""
-    return df._jdf.rdd().count()
-
-
 def _latest_by(rows, key) -> dict:
     """{key(row): the row with the greatest (block, order)} — the
     latest-version rule of every versioned store table, on the driver."""
@@ -381,34 +373,47 @@ class DocStore:
     def _read_docs(self, path: str, buckets: set[int] | None = None) -> DataFrame:
         """Collection read: doc rows + the doc_bucket partition column.
 
-        Reads from explicitly-listed entries of the resolved directory:
+        A scan (no ``buckets``) hands Spark the parquet files listed from
+        the resolved directory, never a directory, so the frame's roots
+        are immutable files: a refresh (Spark re-lists a persisted frame's
+        roots when it writes beneath them) finds the same files, and the
+        frame keeps its data however many appends land after it was
+        built. An id lookup names its ``buckets`` and reads those
+        ``doc_bucket=`` directories: it is collected at once, so it needs
+        no such guarantee, and one directory root is listed without the
+        listing job Spark runs for more than 32 root files.
 
-        - ``doc_bucket=`` partition directories (with basePath, so the
-          partition column and its pruning survive) — only the ``buckets``
-          given, when an id lookup names them;
-        - legacy root-level flat files, unioned with a null doc_bucket
-          (Spark's partition discovery silently drops root files once
-          partition dirs exist) — read by id lookups too, since they
-          carry no bucket;
-        - anything else — in particular an orphan ``gen-*`` snapshot left
-          by a crashed compaction before its pointer flip — is ignored.
+        Either way the read also takes the legacy root-level flat files,
+        unioned with a null doc_bucket (Spark's partition discovery
+        silently drops root files once partition dirs exist; id lookups
+        read them too, since they carry no bucket). Anything else — in
+        particular an orphan ``gen-*`` snapshot left by a crashed
+        compaction before its pointer flip — is ignored.
         """
+
+        def data(names):
+            return [f for f in names if f.endswith(".parquet")
+                    and not os.path.basename(f).startswith(("_", "."))]
+
         entries = self.fs.listdir(path)
-        flat = [
-            os.path.join(path, f) for f in entries
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-        wanted = None if buckets is None else {f"doc_bucket={b}" for b in buckets}
-        dirs = [
-            os.path.join(path, e) for e in entries
-            if e.startswith("doc_bucket=") and (wanted is None or e in wanted)
-        ]
+        flat = [os.path.join(path, f) for f in data(entries)]
+        dirs = [e for e in entries if e.startswith("doc_bucket=")]
+        if buckets is None:
+            bucketed = [
+                f for e in dirs
+                for f in data(self.fs.list_files_recursive(os.path.join(path, e)))
+            ]
+        else:
+            bucketed = [
+                os.path.join(path, f"doc_bucket={b}") for b in sorted(buckets)
+                if f"doc_bucket={b}" in dirs
+            ]
         parts = []
-        if dirs:
+        if bucketed:
             parts.append(
                 self.spark.read.schema(DOC_READ_SCHEMA)
                 .option("basePath", path)
-                .parquet(*dirs)
+                .parquet(*bucketed)
             )
         if flat:
             parts.append(
@@ -742,15 +747,13 @@ class DocStore:
         the shuffle.
 
         The returned DataFrame keeps the file listing it was built from:
-        every action on it, or on a frame derived from it, reads the same
-        files, however many appends land after it was built. A caller that
-        appends to the collection and then re-evaluates a frame built
-        before the append (the block applier's log rows, replay's update
-        merge) therefore sees the state before its own append. Two limits:
-        while a frame over the collection is persisted, Spark re-lists it
-        on every write under the collection's directory, and frames with
-        the same plan read that cache; and a frame held across two
-        compactions can lose its files (see ``_rewrite``).
+        every action on it, or on a frame derived from it, persisted or
+        not, reads the same files, however many appends land after it was
+        built (see ``_read_docs``). A caller that appends to the collection
+        and then re-evaluates a frame built before the append (the block
+        applier's log rows, replay's update merge) therefore sees the state
+        before its own append. A frame held across two compactions can
+        lose its files (see ``_rewrite``).
         """
         self._require_col(db_addr, col)
         df = self._read_docs(self._data_path(db_addr, col))
@@ -924,12 +927,12 @@ class DocStore:
         ``limit`` rows (all of them when ``limit`` is None).
 
         The matched set is persisted for the duration of the call only:
-        the count fills it, the page reads it in one task (a limit is then
-        one job, not a take that widens over the partitions), and it is
-        released before returning. Count and rows come from one
-        ``current_state`` frame; an append from another thread that lands
-        between the count and the page re-lists the persisted set (see
-        ``current_state``), so the two can then straddle that append.
+        the count fills it, the page reads it, and it is released before
+        returning. Count and rows come from one ``current_state`` frame,
+        so they agree even when another thread appends between them. A
+        page with a ``limit`` and no sort reads the set in one task, so
+        the limit is one job, not a take that widens over the partitions;
+        a sorted or an unlimited page runs over all partitions.
         """
         from rtstore_spark.jql.compiler import apply_stages, compile_predicate
         from rtstore_spark.jql.parser import parse_jql
@@ -940,12 +943,19 @@ class DocStore:
             compile_predicate(q, state_df, params=params, doc_col="doc")
         )
         if any(a.kind == "count" for a in q.applies):
-            return [], _count_rows(matched_df)
+            return [], matched_df.count()
         matched_df.persist()
         try:
-            count = _count_rows(matched_df)
+            count = matched_df.count()
+            # apply_stages sorts on an order stage, and on doc_id for a
+            # query's own skip or limit
+            sorts = any(
+                a.kind in ("asc", "desc", "skip", "limit") for a in q.applies
+            )
+            one_task = limit is not None and not sorts
             page = apply_stages(
-                matched_df.coalesce(1), q, doc_col="doc", order_col="doc_id"
+                matched_df.coalesce(1) if one_task else matched_df,
+                q, doc_col="doc", order_col="doc_id",
             )
             if offset:
                 page = page.offset(offset)

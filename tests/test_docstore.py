@@ -199,7 +199,9 @@ class TestJobCounts:
     def test_run_query_jobs(self, spark, tmp_path):
         """RunQuery: a page query counts and collects the matched set in
         at most four jobs; a ``| count`` query is one count, at most two
-        jobs (the window's shuffle stage and the count)."""
+        jobs (the window's shuffle stage and the count). Those are the
+        counts with one shuffle partition, as the node benchmark runs;
+        with more, the count's final aggregate is one job more."""
         store = DocStore(spark, str(tmp_path / "qjobs"))
         db = store.create_database(ALICE, nonce=1)
         store.create_collection(db, "c", [], ALICE)
@@ -213,13 +215,14 @@ class TestJobCounts:
             return int(sched.nextJobId()) - before, out
 
         store._require_col(db, "c")  # warm the catalog
+        extra = int(int(spark.conf.get("spark.sql.shuffle.partitions")) > 1)
         n, (rows, count) = jobs(
             lambda: store.query_docs(db, "c", "/[v >= 3]", offset=1, limit=3)
         )
-        assert n <= 4, f"page query took {n} jobs"
+        assert n <= 4 + extra, f"page query took {n} jobs"
         assert count == 6 and len(rows) == 3
         n, (rows, count) = jobs(lambda: store.query_docs(db, "c", "/* | count"))
-        assert n <= 2, f"| count took {n} jobs"
+        assert n <= 2 + extra, f"| count took {n} jobs"
         assert rows == [] and count == 9
 
 
@@ -420,15 +423,18 @@ class TestDocumentCRUD:
         later append, while a fresh query sees the append."""
         db, col = db_col
         store.add_docs(db, col, ['{"city": "cached"}'], ALICE)
-        cache = spark._jsparkSession.sharedState().cacheManager()
+        # only this test's entries: other modules may hold caches of
+        # their own in the shared session
+        cached = spark.sparkContext._jsc.getPersistentRDDs
+        before = set(cached().keySet())
         for _ in range(3):
             rows, count = store.query_docs(db, col, "/[city = cached]")
-            assert cache.isEmpty()
+            assert set(cached().keySet()) == before
         store.add_docs(db, col, ['{"city": "cached"}'], ALICE)
         assert count == 1 and len(rows) == 1
         rows2, n = store.query_docs(db, col, "/[city = cached]")
         assert n == 2 and len(rows2) == 2
-        assert cache.isEmpty()
+        assert set(cached().keySet()) == before
 
     def test_update_merge_patch_preserves_fields(self, store, db_col):
         # EJDB2 patch semantics: doc_store.rs:470-480 — patching
@@ -559,6 +565,57 @@ class TestHeldState:
         store.delete_docs(db, "c", [1], ALICE)
         assert ids(held) == [1, 2, 3]
         assert ids(store.current_state(db, "c")) == [2, 3, 4]
+
+    def test_persisted_frame_ignores_append_from_another_thread(
+        self, spark, tmp_path
+    ):
+        """Spark re-lists a persisted frame's roots when a write lands
+        beneath them; the roots are files, so the re-listed frame keeps
+        its rows, and so does an unpersisted frame over the same files."""
+        store = DocStore(spark, str(tmp_path / "persisted"))
+        db = store.create_database(ALICE, nonce=1)
+        store.create_collection(db, "c", [], ALICE)
+        store.add_docs(db, "c", ['{"v": 1}', '{"v": 2}'], ALICE)
+        held = store.current_state(db, "c").persist()
+        try:
+            assert held.count() == 2
+            writer = threading.Thread(
+                target=store.add_docs, args=(db, "c", ['{"v": 3}'], ALICE)
+            )
+            writer.start()
+            writer.join()
+            assert held.count() == 2
+            assert sorted(r["doc_id"] for r in held.collect()) == [1, 2]
+        finally:
+            held.unpersist()
+        assert store.current_state(db, "c").count() == 3
+
+    def test_run_query_count_and_page_agree_across_an_append(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """An append from another thread that lands between RunQuery's
+        count and its page reaches neither."""
+        from rtstore_spark.jql import compiler
+
+        store = DocStore(spark, str(tmp_path / "straddle"))
+        db = store.create_database(ALICE, nonce=1)
+        store.create_collection(db, "c", [], ALICE)
+        store.add_docs(db, "c", ['{"v": 1}', '{"v": 2}'], ALICE)
+        real = compiler.apply_stages
+
+        def append_then_stage(*args, **kwargs):
+            writer = threading.Thread(
+                target=store.add_docs, args=(db, "c", ['{"v": 3}'], ALICE)
+            )
+            writer.start()
+            writer.join()
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(compiler, "apply_stages", append_then_stage)
+        rows, count = store.query_docs(db, "c", "/[v > 0]", limit=10)
+        assert count == 2 and len(rows) == 2
+        monkeypatch.setattr(compiler, "apply_stages", real)
+        assert store.query_docs(db, "c", "/[v > 0]", limit=10)[1] == 3
 
     def test_held_frame_survives_first_compaction(self, spark, tmp_path):
         """Before its first compaction a collection's live table is its
